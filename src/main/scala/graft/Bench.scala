@@ -220,7 +220,7 @@ object Bench {
     // must read as failure, not as a slow-but-plausible number). The line
     // count is taken from the replay file itself, never hardcoded.
     def replayThroughput(streamSpark: SparkSession, lines: Seq[String],
-                         tag: String, flat: Boolean = false): Double = {
+                         tag: String): Double = {
       import java.nio.file.Files
       import scala.jdk.CollectionConverters._
       var dirs = Seq.empty[java.io.File]
@@ -234,8 +234,7 @@ object Bench {
         val t0 = System.nanoTime()
         val (main, dlq) = graft.streaming.CdcStreamPipeline.start(
           streamSpark.readStream.text(src.toString), sinks,
-          org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-          flatServing = flat)
+          org.apache.spark.sql.streaming.Trigger.AvailableNow())
         val done = main.awaitTermination(300000) & dlq.awaitTermination(300000)
         if (!done) { main.stop(); dlq.stop(); -1.0 }
         else lines.size / ((System.nanoTime() - t0) / 1e9)
@@ -268,74 +267,29 @@ object Bench {
           m => s""""trans_id": ${m.group(1).toLong + i * 1000000L}""")
       }
     }
-    // one untimed replay first PER LAYOUT: the streaming path's
-    // codegen/state-store init otherwise lands in whichever timed figure
-    // runs first (measured 6× swing on the 613-line replay across bench
-    // invocations), and the flat calibration exercises merge plans the
-    // bucketed warmup never touches — an unwarmed calibration would bias
-    // the graded/flat ratio in the graded side's favor. Then THREE timed
-    // replays per size per layout, best-of reported (round-9 finding: a
-    // single timed replay read 26% below round 8 with zero code change
-    // on the streaming path — one sample cannot tell shared-box noise
-    // from a regression).
-    // Graded legs best-of-3 (round 12): the round-11 artifact's 100k
-    // figure halved vs round 10 with no code regression (the builder's
-    // same-box isolated measurement contradicted it) — one extra sample
-    // costs ~8 s and shrinks the min's variance on a shared box.
-    //
-    // SAME-BINARY pre-migration calibration (round 12): the identical
-    // replay through the retained flat serving merge. Replay throughput
-    // proved box-dependent across rounds, so the cross-round signal of
-    // record is graded/flatcal — a ratio ≥ ~1 says the BucketedState
-    // serving layout is at least throughput-neutral ON THIS RUN'S BOX,
-    // whatever the absolute numbers read. The graded and flat samples
-    // INTERLEAVE (g,f,g,f,...) rather than running as two blocks: load
-    // drift WITHIN the streaming phase (measured: a post-test-suite box
-    // cut the trailing block 2.6× while the leading block lost 1.5×)
-    // then lands on both layouts symmetrically instead of biasing
-    // whichever block ran later.
-    //
-    // FRESH SESSION PER PAIR (round 17): the r16 driver artifact showed
-    // the graded 100k legs decaying monotonically (22.4k → 7.4k → 6.6k
-    // rec/s) while the interleaved flat legs improved — a pattern box
-    // drift cannot produce, but accumulated session state could: every
-    // replay registers a new checkpoint's state-store providers in the
-    // shared session and nothing ever unloads them (their maintenance
-    // threads keep running against deleted /tmp dirs). A same-box
-    // STREAM_ONLY reproduction on this binary showed NO decay (graded
-    // 21.2k/25.6k/21.1k, ratio 0.919 — the r16 read was one bad run),
-    // but the artifact of record must be able to EXONERATE the layout
-    // by itself: each (graded, flat) pair now runs in its own fresh
-    // session (no pair inherits another pair's providers — worst case
-    // one warmup+graded leg's residue lands on the flat leg, the
-    // direction that would only understate the graded/flat ratio), and
-    // the per-pair ratio LIST rides the stdout metric line so decay vs
-    // drift is readable from one driver artifact. Session-scoped
-    // cold-start (state-store init, stream codegen) would otherwise
-    // land entirely on each pair's FIRST (graded) leg, so every pair
-    // warms its session with one untimed fixture replay per layout
-    // first; JVM-wide JIT still survives from the phase's start.
-    def interleaved(n: Int, lines: Seq[String], tag: String)
-        : ((Double, Seq[Double]), (Double, Seq[Double])) =
-      if (subset.isDefined) ((-1.0, Seq.empty), (-1.0, Seq.empty))
+    // Each timed replay runs in its own fresh session after one untimed
+    // fixture replay in that session: the streaming path's codegen and
+    // state-store init otherwise land in whichever timed figure runs
+    // first (measured 6× swing on the 613-line replay across bench
+    // invocations), and a shared session accumulates every replay's
+    // state-store providers, which nothing unloads. Best of THREE timed
+    // replays per size: one sample cannot tell shared-box noise from a
+    // regression. JVM-wide JIT survives from the phase's start.
+    def replays(n: Int, lines: Seq[String], tag: String)
+        : (Double, Seq[Double]) =
+      if (subset.isDefined) (-1.0, Seq.empty)
       else {
-        val pairs = (1 to n).map { i =>
+        val runs = (1 to n).map { i =>
           val ss = newSession()
           try {
             replayThroughput(ss, fixtureLines, s"${tag}warm$i")
-            replayThroughput(ss, fixtureLines, s"${tag}flatwarm$i",
-              flat = true)
-            (replayThroughput(ss, lines, tag + i),
-              replayThroughput(ss, lines, s"${tag}flat$i", flat = true))
+            replayThroughput(ss, lines, tag + i)
           } finally { ss.stop(); System.gc() }
         }
-        ((pairs.map(_._1).max, pairs.map(_._1)),
-          (pairs.map(_._2).max, pairs.map(_._2)))
+        (runs.max, runs)
       }
-    val ((streamRecPerSec, smallRuns), (flatSmall, flatSmallRuns)) =
-      interleaved(3, fixtureLines, "small")
-    val ((streamLargeRecPerSec, largeRuns), (flatLarge, flatLargeRuns)) =
-      interleaved(3, largeLines, "large")
+    val (streamRecPerSec, smallRuns) = replays(3, fixtureLines, "small")
+    val (streamLargeRecPerSec, largeRuns) = replays(3, largeLines, "large")
     // the probe AGAIN at the end of the run: the start probe is the
     // cross-round normalizer (its workload never changes), but it is
     // one sample of one dimension (pure-CPU shuffle) — the r17 close
@@ -346,48 +300,20 @@ object Bench {
     // the box really shifted; start≠end → the probe scattered and its
     // normalization should be discounted for that artifact.
     val probeEndSec = calibrationProbe()
-    // the drift-proof form of the ratio: each interleaved (graded, flat)
-    // pair ran back-to-back under near-identical box conditions, so the
-    // PAIRWISE ratio is immune to monotone load drift that would skew a
-    // best-of/best-of quotient; the median of the three pairs resists
-    // one outlier pair
-    // true median for EVEN survivor counts too (round-12 ADVICE: taking
-    // rs(n/2) makes a 2-survivor "median" the MAX, biasing the declared
-    // cross-round signal upward exactly on noisy runs) — and the pair
-    // count rides the artifact so a degraded sample is visible
-    def medianRatio(g: Seq[Double], fl: Seq[Double]): (Double, Int) = {
-      val rs = g.zip(fl).collect { case (a, b) if a > 0 && b > 0 => a / b }
-        .sorted
-      if (rs.isEmpty) (-1.0, 0)
-      else if (rs.size % 2 == 1) (rs(rs.size / 2), rs.size)
-      else ((rs(rs.size / 2 - 1) + rs(rs.size / 2)) / 2.0, rs.size)
-    }
-    val (ratioSmall, pairsSmall) = medianRatio(smallRuns, flatSmallRuns)
-    val (ratioLarge, pairsLarge) = medianRatio(largeRuns, flatLargeRuns)
-    // the per-pair ratio LIST, in run order — ~40 chars that let a
-    // single driver artifact distinguish "graded legs decaying while
-    // flat holds" (a real layout/state problem) from symmetric box
-    // drift (pairs scatter around a flat mean), without the sidecar
-    def ratioList(g: Seq[Double], fl: Seq[Double]): String =
-      g.zip(fl).map { case (a, b) =>
-        if (a > 0 && b > 0) f(a / b) else "-1.0"
-      }.mkString("[", ",", "]")
-    val rlSmall = ratioList(smallRuns, flatSmallRuns)
-    val rlLarge = ratioList(largeRuns, flatLargeRuns)
 
-    val line = s"""{"metric":"total","value":${f(total)},"unit":"sec","n_queries":${ok.size},"calibration_probe_sec":${f(probeSec)},"calibration_probe_end_sec":${f(probeEndSec)},"streaming_rec_per_sec":${f(streamRecPerSec)},"streaming_rec_per_sec_100k":${f(streamLargeRecPerSec)},"streaming_flatcal_rec_per_sec":${f(flatSmall)},"streaming_flatcal_rec_per_sec_100k":${f(flatLarge)},"streaming_vs_flatcal":${f(ratioSmall)},"streaming_vs_flatcal_100k":${f(ratioLarge)},"streaming_ratio_pairs":[$pairsSmall,$pairsLarge],"streaming_ratio_list":$rlSmall,"streaming_ratio_list_100k":$rlLarge,"errors":$errs,"queries":$qs,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${f(total)},"unit":"sec","n_queries":${ok.size},"calibration_probe_sec":${f(probeSec)},"calibration_probe_end_sec":${f(probeEndSec)},"streaming_rec_per_sec":${f(streamRecPerSec)},"streaming_rec_per_sec_100k":${f(streamLargeRecPerSec)},"errors":$errs,"queries":$qs,"sf":"$sfDir"}"""
     // Sidecar first, then the metric line as the ABSOLUTE last stdout
     // output (after spark.stop()): round 7's artifact recorded `parsed:
     // null` because the driver's structured extraction missed the line
     // inside a 2000-char log tail. The stdout line carries every query
     // (r19); the sidecar additionally carries both raw iterations plus
     // the min per query, and every timed iteration of each streaming
-    // replay leg (graded and flat).
+    // replay leg.
     val allQ = names.sorted.map { n =>
       "\"" + n + s"""":{"r1":${f(r1(n))},"r2":${f(r2(n))},"min":${f(results.toMap.apply(n))}}"""
     }.mkString("{", ",", "}")
     val streamRunsJson =
-      s"""{"small":${smallRuns.map(f).mkString("[", ",", "]")},"large":${largeRuns.map(f).mkString("[", ",", "]")},"flat_small":${flatSmallRuns.map(f).mkString("[", ",", "]")},"flat_large":${flatLargeRuns.map(f).mkString("[", ",", "]")}}"""
+      s"""{"small":${smallRuns.map(f).mkString("[", ",", "]")},"large":${largeRuns.map(f).mkString("[", ",", "]")}}"""
     // chunk_size makes the chunk boundaries reconstructible from the
     // sorted queries_full keys (grouped(chunk_size) in sorted order) —
     // cross-round diffs can then tell "chunk composition shifted" from
@@ -397,7 +323,7 @@ object Bench {
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_LAST_LOCAL.json"), sidecar + "\n")
     catch { case scala.util.control.NonFatal(_) => () }
-    // every session (query chunks and per-pair streaming) is already
+    // every session (query chunks and per-replay streaming) is already
     // stopped by its own scope
     println(line)
   }

@@ -23,12 +23,16 @@ object GatedQuery {
     * while concurrent processes (a Verify racing a Bench) get disjoint
     * trees instead of overwriting each other's index mid-probe — and
     * under java.io.tmpdir so the repo and testdata trees are never
-    * written. */
+    * written. The sf dir segment is its base name plus a hash of its
+    * CANONICAL path: two table dirs that share a base name (`a/tables`,
+    * `b/tables`) must not share a stateful query's persisted state,
+    * while two spellings of one dir must. */
   def indexScratch(sfDir: String, name: String): String = {
     registerScratchCleanup()
+    val dir = new java.io.File(sfDir).getCanonicalFile
     s"${System.getProperty("java.io.tmpdir")}/graft_index/" +
       s"p${ProcessHandle.current().pid()}/" +
-      s"${new java.io.File(sfDir).getName}/$name"
+      f"${dir.getName}-${dir.getPath.hashCode}%08x/$name"
   }
 
   // per-pid isolation would otherwise leak a full index tree per JVM run

@@ -320,13 +320,13 @@ object BucketedState {
     resolveCore(spark, dir, batchId, schema, what,
       pin = Some(numBuckets), freshP = numBuckets)
 
-  /** [[resolveForFold]] WITHOUT the fan-out pin — for the one tenant
-    * class that handles a fan-out change itself (the serving view's
-    * self-healing re-bucket merge, [[CdcStreamPipeline.sinkBatch]]):
-    * same layout check, schema guard, and retry fence, but the caller
-    * receives whatever p the manifest records (`freshP` for an empty
-    * dir) and decides. Every other tenant should keep the pinned form —
-    * an unnoticed p mismatch is a misconfiguration, not a migration. */
+  /** [[resolveForFold]] WITHOUT the fan-out pin. Its one caller is the
+    * serving view's write, [[CdcStreamPipeline.foldServing]], which
+    * handles a fan-out change itself (grow-only re-bucket): same layout
+    * check, schema guard, and retry fence, but the caller receives
+    * whatever p the manifest records (`freshP` for an empty dir) and
+    * decides. Every other tenant should keep the pinned form — an
+    * unnoticed p mismatch is a misconfiguration, not a migration. */
   private[streaming] def resolveForFoldAnyP(spark: SparkSession,
       dir: String, batchId: Long, schema: StructType, what: String,
       freshP: Int): Option[(Int, Map[Int, Long])] =
@@ -620,7 +620,8 @@ object BucketedState {
   }
 
   /** Newest committed full state for a tenant, manifest-resolved, with
-    * the fan-out check every reader must make. */
+    * the fan-out check of a pinned tenant's reader (the serving view,
+    * whose p may grow, reads every bucket through [[readPruned]]). */
   def readState(spark: SparkSession, dir: String, schema: StructType,
                 numBuckets: Int, what: String): DataFrame = {
     val (v, p, manifest) = latestManifest(spark, dir).getOrElse(

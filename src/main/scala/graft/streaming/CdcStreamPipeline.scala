@@ -25,8 +25,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   *
   * Scale notes: every stateful op is watermark-bounded (state cannot grow
   * past the lateness horizon — the Kinesis 24 h retention analog, kds.py:24);
-  * the serving merge shuffles on the primary key only (the reference's
-  * partition-key exchange, S5); the archive append is partition-local.
+  * the serving merge shuffles once, on the bucket of the primary key
+  * (the reference's partition-key exchange, S5); the archive append is
+  * partition-local.
   */
 object CdcStreamPipeline {
 
@@ -96,17 +97,11 @@ object CdcStreamPipeline {
   def start(lines: DataFrame, sinks: Sinks, trigger: Trigger,
             lateness: String = "1 hour",
             rules: Seq[Envelope.SelectionRule] = Envelope.defaultRules,
-            rotation: Rotation = Rotation.NoRotation,
-            flatServing: Boolean = false,
-            servingBuckets: Int = ServingBuckets)
+            rotation: Rotation = Rotation.NoRotation)
       : (StreamingQuery, StreamingQuery) = {
     // fail an invalid rule set HERE, not inside foreachBatch at batch 0 —
     // a misconfiguration must abort start(), never a running query
     Envelope.selection(rules)
-    require(servingBuckets > 0,
-      s"servingBuckets must be positive, got $servingBuckets — pmod by 0 " +
-        "would NULL every bucket and each trigger would discard all " +
-        "prior serving state")
     val parsed = parseLines(lines)
 
     // Dedup key = (pk, transaction-id, event time) — the reference's `_id`
@@ -151,8 +146,7 @@ object CdcStreamPipeline {
       .dropDuplicatesWithinWatermark("sch", "tbl", "pk", "txid", "event_ts")
       .drop("sch", "tbl", "pk", "txid")
       .writeStream
-      .foreachBatch(
-        sinkBatch(sinks, rules, rotation, flatServing, servingBuckets) _)
+      .foreachBatch(sinkBatch(sinks, rules, rotation) _)
       .trigger(trigger)
       .option("checkpointLocation", sinks.checkpoint).start()
 
@@ -186,16 +180,19 @@ object CdcStreamPipeline {
     * same contract DMS itself places on the binlog position). */
   def bootstrap(snapshot: DataFrame, loadTs: String, sinks: Sinks,
                 schemaName: String = "testdb",
-                tableName: String = "retail_trans",
-                servingBuckets: Int = ServingBuckets): Unit =
+                tableName: String = "retail_trans"): Unit =
     bootstrapEnvelope(
       Bootstrap.asLoadEnvelope(snapshot, loadTs, schemaName, tableName),
-      sinks, servingBuckets)
+      sinks)
 
-  /** Serving-state bucket fan-out; fixed for the life of a serving dir.
-    * Sized for the fixture/test scale — a production deployment sizes
-    * by key cardinality (≈ state-rows / target-bucket-rows) once,
-    * before first start; [[BucketedState]] pins p per dir thereafter. */
+  /** Bucket fan-out at which writers lay out a FRESH serving dir. An
+    * existing dir keeps the p its manifest records until a binary whose
+    * constant exceeds it folds into it; that fold re-buckets the whole
+    * state at the constant ([[foldServing]], grow-only). Readers never
+    * name it: they resolve p from the manifest. Sized for the
+    * fixture/test scale — a production deployment sizes by key
+    * cardinality (≈ state-rows / target-bucket-rows) and raises it by a
+    * deploy as the view grows. */
   val ServingBuckets = 16
 
   /** The serving tenant's on-disk schema: envelope row + the 64-bit
@@ -241,30 +238,17 @@ object CdcStreamPipeline {
     * envelope-wrapped union — one [[graft.cdc.Bootstrap.asLoadEnvelope]]
     * per fanned-out table, each stamped with its own (loadTs, schema,
     * table) — so a wildcard-selected stream can cut over every shard in
-    * one seeded state. The seed commits through the same
-    * [[BucketedState]] protocol as every stream merge, at version -1
-    * with EVERY bucket owned by the seed — batch 0 resolves it as
-    * ordinary prior state. */
-  def bootstrapEnvelope(seedEnv: DataFrame, sinks: Sinks,
-                        servingBuckets: Int = ServingBuckets): Unit = {
-    val spark = seedEnv.sparkSession
-    // seeds are the LARGEST state the pipeline ever writes at once, so
-    // a deployment at a raised fan-out must seed AT that fan-out —
-    // hardcoding the default here would make batch 0 immediately pay a
-    // full-state re-bucket rewrite of the entire seed
-    require(servingBuckets > 0,
-      s"servingBuckets must be positive, got $servingBuckets")
-    require(BucketedState.latestManifest(spark, sinks.serving).isEmpty,
+    * one seeded state. The seed is the serving fold ([[foldServing]])
+    * into the empty dir at version -1, so EVERY bucket is owned by the
+    * seed and batch 0 resolves it as ordinary prior state. The fold's
+    * latestPerKey also tolerates duplicate-PK snapshots (identical
+    * stamps — an arbitrary survivor is the only coherent answer). */
+  def bootstrapEnvelope(seedEnv: DataFrame, sinks: Sinks): Unit = {
+    require(
+      BucketedState.latestManifest(seedEnv.sparkSession, sinks.serving).isEmpty,
       s"bootstrap requires an empty serving state under ${sinks.serving}; " +
         "it seeds v=-1 BELOW every stream version and must run before the stream")
-    // latestPerKey: tolerate duplicate-PK snapshots (identical stamps —
-    // an arbitrary survivor is the only coherent answer) and keep the
-    // seed's shape byte-identical to every later merge's output
-    val seed = withServingKey(latestPerKey(seedEnv))
-      .withColumn(BucketedState.BucketCol,
-        BucketedState.bucketOf(col("k"), servingBuckets))
-    BucketedState.commit(seed, sinks.serving, -1L, servingBuckets,
-      (0 until servingBuckets).toSet, Map.empty)
+    foldServing(seedEnv, sinks.serving, -1L, ServingBuckets)
   }
 
   /** DISASTER RECOVERY: rebuild the serving state from the ARCHIVE —
@@ -299,29 +283,23 @@ object CdcStreamPipeline {
     * way). Works over compacted archives too — partition discovery
     * reads folded and per-batch dirs alike. */
   def rebuildServingFromArchive(spark: SparkSession, sinks: Sinks,
-      servingBuckets: Int = ServingBuckets,
       seedEnv: Option[DataFrame] = None): Unit = {
     val archived =
       spark.read.parquet(sinks.archive).select(col("data"), col("metadata"))
     bootstrapEnvelope(
       seedEnv.map(se => archived.unionByName(
         se.select(col("data"), col("metadata")))).getOrElse(archived),
-      sinks, servingBuckets)
+      sinks)
   }
 
-  /** Batch merge applied by foreachBatch: DLQ split, archive append, and
-    * last-write-wins serving merge that RETAINS delete tombstones in the
-    * persisted state (so a stale update replayed later cannot resurrect a
-    * deleted key); the serving read path filters tombstones out. */
+  /** Batch merge applied by foreachBatch: archive append, and the
+    * last-write-wins serving fold ([[foldServing]]) that RETAINS delete
+    * tombstones in the persisted state; the serving read path filters
+    * tombstones out. */
   def sinkBatch(sinks: Sinks,
                 rules: Seq[Envelope.SelectionRule] = Envelope.defaultRules,
-                rotation: Rotation = Rotation.NoRotation,
-                flatServing: Boolean = false,
-                servingBuckets: Int = ServingBuckets)
+                rotation: Rotation = Rotation.NoRotation)
                (batch: DataFrame, batchId: Long): Unit = {
-    require(servingBuckets > 0,
-      s"servingBuckets must be positive, got $servingBuckets")
-    val spark = batch.sparkSession
     batch.persist()
     try {
       val good = batch.filter(Envelope.selection(rules))
@@ -366,152 +344,100 @@ object CdcStreamPipeline {
             .write.partitionBy("rotation")
       }).mode("overwrite").parquet(s"${sinks.archive}/batch_id=$batchId")
 
-      // S9: serving state merge (idempotent under redelivery: the merge is
-      // a pure last-write-wins reduction over the union of old state and
-      // the new batch). State lives on BucketedState (round 11 — this was
-      // the last flat full-rewrite tenant): rows hash-bucket on the
-      // serving key, the batch's keys derive the candidate buckets, ONLY
-      // those buckets are read and re-merged, and the commit republishes
-      // exactly those buckets — every untouched bucket carries forward as
-      // a manifest pointer. Per-trigger read, compute, and write are
-      // O(batch's buckets), never O(state): the posture that holds when
-      // the serving view is 10^9 keys and a 60 s trigger carries a few
-      // thousand changes. Readers resolve manifests (never a dir being
-      // written); retention and retry semantics are the shared
-      // BucketedState protocol (resolveForFold fenced this batch above).
-      //
-      // This tenant follows JoinViewMaintenance's posture — dirty =
-      // candidates, NO post-fold diff — rather than foldCommitPruned's:
-      // LWW is key-local (a batch key's winner can only change its own
-      // bucket, and a key's row never vanishes without a successor in
-      // the same bucket — deletes are retained tombstone rows), so the
-      // candidate set is already exact for every batch that changes its
-      // keys' winners. A diff could only shrink writes for pure-replay
-      // deliveries (rare under DMS), and measuring on the replay bench
-      // showed its price is real EVERY trigger: the anti-join plus two
-      // localCheckpoint barriers cost ~45% of single-trigger throughput
-      // at the 100k-line batch size. Re-publishing an unchanged
-      // candidate bucket is byte-identical state — correct, and cheaper
-      // than proving it unchanged each trigger.
-      // BENCH-CALIBRATION seam (flatServing=true): the round-10 flat
-      // full-rewrite merge, retained as the pre-migration reference so
-      // every bench artifact can carry a SAME-BINARY, SAME-BOX pre/post
-      // comparison of the serving layout — replay throughput proved
-      // box-dependent across rounds (24.3k → 10.7k rec/s with no code
-      // regression), so the cross-round signal of record is the ratio
-      // against this frozen baseline, not the absolute number. Never use
-      // in production: per-trigger write is O(state), the exact cost the
-      // BucketedState migration removed. Protocol and shape match the
-      // pre-migration code exactly: read newest full snapshot, union the
-      // batch, one LWW reduction, commit the full state via the shared
-      // staging+rename versioned protocol.
-      if (flatServing) {
-        val incoming = good.select(col("data"), col("metadata"))
-        val merged = latestPerKey(
-          VersionedState.latestSnapshot(spark, sinks.serving)
-            .map(_.unionByName(incoming)).getOrElse(incoming))
-        VersionedState.commit(merged, sinks.serving, batchId,
-          keepVersions = 5)
-      } else
-      // resolveForFoldAnyP, not the pinned resolve: the serving view is
-      // the tenant whose fan-out CHANGES over its life (SCALE.md sizes
-      // p ≈ state / 128 MB and this view grows with the source), so a
-      // deploy that raises `servingBuckets` SELF-HEALS on the next
-      // trigger — the re-bucket branch below — instead of crash-looping
-      // on a pin. Wrong-dir accidents stay loudly caught one layer
-      // down: the schema guard rejects any non-serving tenant's layout
-      // (the envelope struct paths are this tenant's signature).
-      BucketedState.resolveForFoldAnyP(spark, sinks.serving, batchId,
-        servingSchema, "serving view", freshP = servingBuckets)
-        .foreach { case (p, manifest) =>
-        if (p != servingBuckets) {
-          // GROW-ONLY: production fan-out changes are growth-driven
-          // (p ≈ state / 128 MB), and the asymmetry is load-bearing —
-          // a surviving OLD-binary driver in a rolling deploy would
-          // otherwise alternate full-state re-buckets with the new one
-          // (16→32→16→… — an O(state) rewrite every trigger, forever,
-          // silently). Up-only makes the zombie fail loudly instead;
-          // a deliberate shrink is a reseed/migration, not a trigger.
-          require(servingBuckets > p,
-            s"serving fan-out can only GROW in-stream (on-disk p=$p, " +
-              s"engine asks $servingBuckets) — a shrink (or a stale " +
-              "binary's old constant) must not re-bucket; reseed or " +
-              "migrate explicitly")
-          // IN-STREAM RE-BUCKET MERGE, at the engine's own id (the
-          // foldCompact discipline — no id-coordination hazard): fold
-          // this batch into the FULL state and re-home every row under
-          // the configured fan-out; every bucket 0..new-1 points at this
-          // id, no pointer reaches behind the re-bucket. A retried
-          // re-bucket trigger fences normally (p now matches, and the
-          // version fence short-circuits inside the resolve). Cost is
-          // one full-state read + write — the price of any compaction,
-          // paid once per fan-out change.
-          val incoming = good.select(col("data"), col("metadata"))
-          val prev = BucketedState.read(spark, sinks.serving,
-            servingSchema, manifest, None).drop(BucketedState.BucketCol, "k")
-          val merged = withServingKey(
-              latestPerKey(prev.unionByName(incoming)))
-            .withColumn(BucketedState.BucketCol,
-              BucketedState.bucketOf(col("k"), servingBuckets))
-            .repartition(col(BucketedState.BucketCol))
-          BucketedState.commit(merged, sinks.serving, batchId,
-            servingBuckets, (0 until servingBuckets).toSet, Map.empty)
-        } else {
-        val incoming =
-          withServingKey(good.select(col("data"), col("metadata")))
-        // one tiny job off the persisted batch frame: the candidate set
-        // is |distinct batch buckets| ≤ ServingBuckets integers. The
-        // FIRST commit (no manifest) owns every bucket by definition —
-        // there is nothing to prune, so skip the derivation job.
-        val candidates =
-          if (manifest.isEmpty) (0 until p).toSet
-          else incoming
-            .select(BucketedState.bucketOf(col("k"), p).as("b")).distinct()
-            .collect().map(_.getInt(0)).toSet
-        val prev = BucketedState.read(spark, sinks.serving, servingSchema,
-          manifest, Some(candidates)).drop(BucketedState.BucketCol, "k")
-        // read → merge → write fuse into ONE job (no checkpoint barriers:
-        // `incoming` recomputes from the persisted batch, `prev` from the
-        // committed parquet — both stable under re-evaluation). Every
-        // merged row lands in a candidate bucket by construction (prev
-        // came from them; batch keys hash to them).
-        // repartition on the bucket before the partitioned write: without
-        // it every write task spills a file into every candidate bucket
-        // dir (tasks × buckets small files + a per-task dynamic-partition
-        // sort); with it each bucket is one task's one file. Parallelism
-        // = |candidates|, which is the write's natural width.
-        val merged = withServingKey(
-            latestPerKey(prev.unionByName(incoming.drop("k"))))
-          .withColumn(BucketedState.BucketCol,
-            BucketedState.bucketOf(col("k"), p))
-          .repartition(col(BucketedState.BucketCol))
-        BucketedState.commit(merged, sinks.serving, batchId, p,
-          candidates, manifest)
-        }
-      }
+      // S9: serving state merge, idempotent under redelivery (a pure
+      // last-write-wins reduction over the old state and the batch)
+      foldServing(good, sinks.serving, batchId, ServingBuckets)
     } finally batch.unpersist()
+  }
+
+  /** The serving tenant's ONE write — the seed, every stream merge and
+    * a fan-out grow: fold `envelopes` into the serving state under `dir`
+    * by last-write-wins and publish version `versionId` laid out at
+    * fan-out `targetP`. Tombstones are retained rows, so a stale update
+    * replayed later cannot resurrect a deleted key.
+    *
+    * While `targetP` equals the on-disk p, a fold reads and republishes
+    * only the buckets its keys hash to; every other bucket carries
+    * forward as a manifest pointer. LWW is key-local (a key's winner
+    * lives in its own bucket, and a deleted key keeps a tombstone row),
+    * so those candidate buckets are exactly the dirty set and no
+    * post-fold diff is needed — a replayed candidate bucket republishes
+    * byte-identical. An empty dir owns every bucket, so its first fold
+    * skips the candidate job.
+    *
+    * GROW-ONLY fan-out: a `targetP` above the on-disk p folds into the
+    * FULL state and re-homes every row at `targetP`, all at this
+    * version (the foldCompact discipline: the id stays the caller's, a
+    * retried grow fences on its own committed version). A `targetP`
+    * below it is refused — a surviving old binary in a rolling deploy
+    * would otherwise re-bucket the full state back and forth every
+    * trigger; a shrink is a reseed or migration, never a trigger.
+    *
+    * resolveForFoldAnyP, not the pinned resolve, so that grow can
+    * happen; a wrong dir still fails loudly on the layout check or on
+    * the schema guard (the envelope struct paths are this tenant's
+    * signature). */
+  private[graft] def foldServing(envelopes: DataFrame, dir: String,
+      versionId: Long, targetP: Int): Unit = {
+    val spark = envelopes.sparkSession
+    BucketedState.resolveForFoldAnyP(spark, dir, versionId, servingSchema,
+      "serving view", freshP = targetP).foreach { case (p, manifest) =>
+      require(targetP >= p,
+        s"serving fan-out can only GROW in-stream (on-disk p=$p, " +
+          s"engine asks $targetP) — a shrink (or a stale binary's old " +
+          "constant) must not re-bucket; reseed or migrate explicitly")
+      val incoming =
+        withServingKey(envelopes.select(col("data"), col("metadata")))
+      val rewriteAll = manifest.isEmpty || targetP > p
+      // one tiny job off the batch: |distinct batch buckets| ≤ p ints
+      val candidates =
+        if (rewriteAll) (0 until targetP).toSet
+        else incoming
+          .select(BucketedState.bucketOf(col("k"), p).as("b")).distinct()
+          .collect().map(_.getInt(0)).toSet
+      val prev = BucketedState.read(spark, dir, servingSchema, manifest,
+          if (rewriteAll) None else Some(candidates))
+        .drop(BucketedState.BucketCol)
+      // read → merge → write run as ONE plan with ONE shuffle (no
+      // checkpoint barriers: `incoming` recomputes from its source,
+      // `prev` from committed parquet). The repartition on the bucket
+      // feeds both the LWW window and the partitioned write, so each
+      // bucket is one task's one file.
+      val merged = latestPerKey(prev.unionByName(incoming)
+        .withColumn(BucketedState.BucketCol,
+          BucketedState.bucketOf(col("k"), targetP))
+        .repartition(col(BucketedState.BucketCol)))
+      // on a grow the candidates cover every old bucket too, so no
+      // pointer of the prior manifest survives the commit
+      BucketedState.commit(merged, dir, versionId, targetP, candidates,
+        manifest)
+    }
   }
 
   /** Last write per key including tombstones — the persisted serving
     * state. Keyed on (schema, table, pk): single-table streams see
     * identical behavior (constant prefix), multi-table streams with
-    * colliding pk ranges stay apart. Still one shuffle. */
-  def latestPerKey(env: DataFrame): DataFrame = {
+    * colliding pk ranges stay apart. The window also partitions on the
+    * serving rows' bucket, a function of that key (so the winners are
+    * the same), which lets it run within the fold's repartition by
+    * bucket instead of shuffling again. */
+  private def latestPerKey(rows: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("metadata.`schema-name`"),
-        col("metadata.`table-name`"), col(s"data.`$ServingPkCol`"))
+    val w = Window.partitionBy(col(BucketedState.BucketCol),
+        col("metadata.`schema-name`"), col("metadata.`table-name`"),
+        col(s"data.`$ServingPkCol`"))
       .orderBy(col("metadata.timestamp").desc,
         col("metadata.`transaction-id`").desc)
-    env.withColumn("rn", row_number().over(w))
+    rows.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1).drop("rn")
   }
 
-  /** Full persisted serving state (tombstones included), manifest-
-    * resolved through [[BucketedState.readState]]. */
-  private def servingState(spark: SparkSession, servingDir: String,
-      servingBuckets: Int): DataFrame =
-    BucketedState.readState(spark, servingDir, servingSchema,
-      servingBuckets, "serving view")
+  /** Full persisted serving state (tombstones included): every bucket
+    * of the newest manifest, at whatever p it records. */
+  private def servingState(spark: SparkSession,
+      servingDir: String): DataFrame =
+    BucketedState.readPruned(spark, servingDir, servingSchema,
+      "serving view")(p => (0 until p).toSet)
 
   /** POINT LOOKUP against the serving state — single-key form of
     * [[servingLookupBatch]]; returns the live row (0 or 1 rows,
@@ -583,9 +509,8 @@ object CdcStreamPipeline {
     * new versions rather than touching resolved ones, and a resolved
     * version survives for the manifest retention horizon — a reader
     * must consume its DataFrame within that many triggers. */
-  def servingSnapshot(spark: SparkSession, servingDir: String,
-                      servingBuckets: Int = ServingBuckets): DataFrame =
-    servingState(spark, servingDir, servingBuckets)
+  def servingSnapshot(spark: SparkSession, servingDir: String): DataFrame =
+    servingState(spark, servingDir)
       .filter(col("metadata.operation") =!= "delete")
       .select(col("data.*"))
 
@@ -593,9 +518,8 @@ object CdcStreamPipeline {
     * of EVERY table with their (schema, table) identity — the fan-out
     * counterpart of [[servingSnapshot]], same columns as the batch
     * [[graft.cdc.Materialize.snapshotByTable]]. */
-  def servingTables(spark: SparkSession, servingDir: String,
-                    servingBuckets: Int = ServingBuckets): DataFrame =
-    servingState(spark, servingDir, servingBuckets)
+  def servingTables(spark: SparkSession, servingDir: String): DataFrame =
+    servingState(spark, servingDir)
       .filter(col("metadata.operation") =!= "delete")
       .select(col("metadata.`schema-name`").as("sch"),
         col("metadata.`table-name`").as("tbl"), col("data.*"))

@@ -88,39 +88,6 @@ class StreamingSpec extends SparkTestBase {
       s"listener counted ${listener.totalInputRows} input rows")
   }
 
-  test("flat-calibration serving merge (bench pre-migration baseline) converges to the same snapshot as the bucketed path") {
-    // the bench's flatServing leg exists to price the serving LAYOUT, so
-    // it must compute the identical serving state — pin it against the
-    // batch materializer (the same oracle the bucketed path is pinned to)
-    // across a multi-batch replay, including the LWW reduction across
-    // triggers
-    val lines = Files.readAllLines(Paths.get(Tables.cdcFixturePath))
-    val src = tmpDir("cdc_flatcal")
-    val (a, b) = (0 until lines.size).partition(_ % 2 == 0)
-    Files.write(Paths.get(s"$src/a.jsonl"),
-      a.map(lines.get).mkString("\n").getBytes)
-    Files.write(Paths.get(s"$src/b.jsonl"),
-      b.map(lines.get).mkString("\n").getBytes)
-    val root = tmpDir("cdc_flatcal_out")
-    val sinks = Sinks(s"$root/serving", s"$root/archive", s"$root/error",
-      s"$root/checkpoint")
-    val (main, dlq) = CdcStreamPipeline.start(
-      spark.readStream.option("maxFilesPerTrigger", "1").text(src), sinks,
-      Trigger.AvailableNow(), flatServing = true)
-    assert(main.awaitTermination(120000), "stream did not finish in 120s")
-    assert(dlq.awaitTermination(120000), "stream did not finish in 120s")
-    val flat = graft.streaming.VersionedState
-      .latestSnapshot(spark, sinks.serving)
-      .getOrElse(fail("flat calibration wrote no serving state"))
-      .filter(col("metadata.operation") =!= "delete")
-      .select(col("data.*"))
-    val batch = Materialize.snapshot(
-      Envelope.changelog(spark, Tables.cdcFixturePath))
-    assert(flat.count() === 210)
-    assert(flat.exceptAll(batch).count() === 0)
-    assert(batch.exceptAll(flat).count() === 0)
-  }
-
   test("serving rebuild from archive: a wiped serving dir recovers byte-equal from the archive sink; checkpoint replays after recovery are no-ops") {
     import graft.streaming.BucketedState
     // normal life: the full fixture through the real pipeline
@@ -247,7 +214,7 @@ class StreamingSpec extends SparkTestBase {
       .collect().toSet === before)
   }
 
-  test("serving fan-out re-bucket: a deploy raising servingBuckets self-heals on the next trigger; retry fences; merges resume at the new p; stale readers throw") {
+  test("serving fan-out re-bucket: a fold at a larger p re-homes every bucket at its id; retry fences; merges resume at the new p; shrink refused; readers follow the on-disk p") {
     import graft.streaming.BucketedState
     val lines = Files.readAllLines(Paths.get(Tables.cdcFixturePath))
     val (a, b) = (0 until lines.size).partition(_ % 2 == 0)
@@ -258,6 +225,8 @@ class StreamingSpec extends SparkTestBase {
       b.map(lines.get).mkString("\n").getBytes)
     val batchA = CdcStreamPipeline.parseLines(spark.read.text(s"$pa/a.jsonl"))
     val batchB = CdcStreamPipeline.parseLines(spark.read.text(s"$pb/b.jsonl"))
+    // what sinkBatch hands the serving fold: the selected envelopes
+    val goodB = batchB.filter(Envelope.selection(Envelope.defaultRules))
     val root = tmpDir("srv_rb_out")
     val sinks = Sinks(s"$root/serving", s"$root/archive", s"$root/error",
       s"$root/checkpoint")
@@ -267,52 +236,53 @@ class StreamingSpec extends SparkTestBase {
     assert(BucketedState.latestManifest(spark, sinks.serving).get._2 ===
       CdcStreamPipeline.ServingBuckets)
 
-    // the deploy raises the fan-out: the NEXT trigger both folds its
+    // a binary whose ServingBuckets is 32: its NEXT fold both folds the
     // batch and re-homes every row under p=32 (SCALE.md sizes the
     // serving fan-out by state volume — this is the growth path)
-    CdcStreamPipeline.sinkBatch(sinks, servingBuckets = 32)(batchB, 1L)
+    CdcStreamPipeline.foldServing(goodB, sinks.serving, 1L, 32)
     val (v1, p1, m1) = BucketedState.latestManifest(spark, sinks.serving).get
     assert(v1 === 1L && p1 === 32)
     assert(m1 === (0 until 32).map(_ -> 1L).toMap,
       "every new-fan-out bucket must re-home at the re-bucket id")
-    val served = CdcStreamPipeline.servingSnapshot(spark, sinks.serving, 32)
+    val served = CdcStreamPipeline.servingSnapshot(spark, sinks.serving)
     val oneShot = Materialize.snapshot(
       Envelope.changelog(spark, Tables.cdcFixturePath))
     assert(served.count() === 210)
     assert(served.exceptAll(oneShot).count() === 0)
     assert(oneShot.exceptAll(served).count() === 0)
 
-    // retried re-bucket trigger: the version fence short-circuits
-    CdcStreamPipeline.sinkBatch(sinks, servingBuckets = 32)(batchB, 1L)
+    // retried re-bucket fold: the version fence short-circuits
+    CdcStreamPipeline.foldServing(goodB, sinks.serving, 1L, 32)
     assert(BucketedState.latestManifest(spark, sinks.serving).get._1 === 1L)
 
     // merges resume normally at the new fan-out (a replayed batch is
     // LWW-idempotent; its dirty buckets live under the new p)
-    CdcStreamPipeline.sinkBatch(sinks, servingBuckets = 32)(batchB, 2L)
+    CdcStreamPipeline.foldServing(goodB, sinks.serving, 2L, 32)
     val dirs2 = BucketedState.bucketDirs(spark, sinks.serving, 2L)
     assert(dirs2.nonEmpty && dirs2.subsetOf((0 until 32).toSet))
-    val after = CdcStreamPipeline.servingSnapshot(spark, sinks.serving, 32)
+    assert(BucketedState.latestManifest(spark, sinks.serving).get._2 === 32)
+
+    // readers name no fan-out: both full views resolve p=32 from the
+    // manifest and answer
+    val after = CdcStreamPipeline.servingSnapshot(spark, sinks.serving)
     assert(after.count() === 210)
     assert(after.exceptAll(oneShot).count() === 0)
+    val tables = CdcStreamPipeline.servingTables(spark, sinks.serving)
+    assert(tables.count() === 210)
+    assert(tables.drop("sch", "tbl").exceptAll(oneShot).count() === 0)
 
-    // a reader still on the OLD fan-out constant fails loudly — readers
-    // must ride the same deploy that changed the fan-out
-    intercept[IllegalArgumentException] {
-      CdcStreamPipeline.servingSnapshot(spark, sinks.serving).count()
-    }
-
-    // ...and so does a WRITER asking to shrink (a stale binary's old
-    // constant, or the zombie half of a rolling deploy): grow-only is
-    // what stops two binaries re-bucketing the full state back and
-    // forth every trigger
+    // a WRITER below the on-disk p is refused: this binary's constant
+    // (16) is what a stale binary or the zombie half of a rolling deploy
+    // carries, and grow-only is what stops two binaries re-bucketing the
+    // full state back and forth every trigger
     val shrink = intercept[IllegalArgumentException] {
-      CdcStreamPipeline.sinkBatch(sinks, servingBuckets = 8)(batchB, 3L)
+      CdcStreamPipeline.sinkBatch(sinks)(batchB, 3L)
     }
     assert(shrink.getMessage.contains("GROW"))
+    assert(BucketedState.latestManifest(spark, sinks.serving).get._1 === 2L)
 
-    // point lookups are PIN-FREE (bucket derived from the on-disk p):
-    // they answered at p=16 before the deploy, and answer at p=32 now —
-    // no interactive-read outage across the grow window
+    // point lookups derive the bucket from the on-disk p: they answered
+    // at p=16 before the grow, and answer at p=32 now
     val anyPk = after.collect().head.getLong(0)
     assert(CdcStreamPipeline.servingLookup(spark, sinks.serving,
       "testdb", "retail_trans", anyPk).count() === 1)
