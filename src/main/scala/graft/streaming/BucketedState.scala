@@ -8,13 +8,14 @@ import org.apache.spark.sql.types.StructType
 /** Key-partitioned versioned state — the 100 TB exit the flat
   * [[VersionedState]] tenants document (SCALE.md "serving merge"): instead
   * of rewriting the WHOLE state as one snapshot per batch, state rows
-  * hash-partition into a fixed number of buckets (`bucket =
-  * pmod(xxhash64(key), P)`), each version directory carries ONLY the
-  * buckets the batch dirtied, and a pointer manifest maps every bucket to
-  * the version that last rewrote it — the LSM/Delta-style partition-level
-  * rewrite. Per-trigger write cost is O(dirty buckets), not O(state);
-  * readers resolve the manifest and partition-prune to the buckets they
-  * need; untouched buckets carry forward as POINTERS, never copies.
+  * hash-partition into the p buckets the newest manifest records
+  * (`bucket = pmod(xxhash64(key), p)`), each version directory carries
+  * ONLY the buckets the batch dirtied, and a pointer manifest maps every
+  * bucket to the version that last rewrote it — the LSM/Delta-style
+  * partition-level rewrite. Per-trigger write cost is O(dirty
+  * buckets), not O(state); readers resolve the manifest and
+  * partition-prune to the buckets they need; untouched buckets carry
+  * forward as POINTERS, never copies.
   *
   * Commit protocol (same exactly-once discipline as [[VersionedState]]):
   * dirty buckets + the manifest land in a staging directory, then ONE
@@ -235,61 +236,41 @@ object BucketedState {
     * run it on a cadence (every N-th trigger / when the manifest's
     * version spread exceeds a bound), with plain folds between.
     *
-    * RE-BUCKETING: `rebucketTo` changes the tenant's bucket fan-out in
-    * the same rewrite. The fan-out is otherwise pinned for the life of a
-    * dir (resolveForFold rejects a mismatched p), but production sizing
-    * is p ≈ state / 128 MB (SCALE.md) — a growing tenant must be able to
-    * raise p without a reseed from source. foldCompact already rewrites
-    * every bucket, so it is the ONE safe place to re-home rows under a
-    * new hash: the commit's manifest records the new p, every bucket
-    * 0..newP-1 points at `batchId`, and folds ABOVE this id resolve the
-    * new fan-out (callers switch their `numBuckets` constant with the
-    * same deploy that requests the re-bucket). `numBuckets` here still
-    * names the CURRENT on-disk fan-out — the pin check stays, so a
-    * re-bucket is always an explicit old→new statement, never an
-    * accidental mismatch. */
+    * Every bucket is rewritten, so the commit lays the state out at
+    * `targetP` (the [[requireGrow]] rule: never below the on-disk p) and
+    * folds above this id resolve that fan-out from the manifest. A
+    * retried grow finds its own committed version under the ordinary
+    * retry fence. */
   def foldCompact(spark: SparkSession, dir: String, batchId: Long,
-                  numBuckets: Int, schema: StructType, keyCol: String,
-                  what: String, rebucketTo: Option[Int] = None)
-                 (fold: DataFrame => DataFrame): Unit = {
-    // RETRY FENCE FOR A RE-BUCKETING BATCH, checked before the generic
-    // prelude: once the re-bucket commit lands, the manifest records the
-    // NEW fan-out, so a retried batch (crash after rename, before the
-    // checkpoint offset commit) would hit resolveForFold's pin check
-    // (numBuckets still names the OLD p) and crash-loop the stream —
-    // exactly the retry the scaladoc promises is a no-op. Recognize our
-    // OWN landed commit and nothing weaker (round-12 ADVICE: a fence on
-    // mere `committed && p matches` would let a wrong-but-bucketed dir
-    // of another tenant with a colliding v= id silently swallow the
-    // batch): the NEWEST manifest must be this very batchId — a
-    // legitimate retry can see no later version, because the engine
-    // only starts batch N+1 after N's offsets commit — AND carry the
-    // requested fan-out, AND pass the schema guard so a foreign dir
-    // fails loudly instead of no-opping. Anything else falls through
-    // to the loud checks.
-    val rebucketLanded = rebucketTo.exists(pNew =>
-      latestManifest(spark, dir).exists { case (v, mp, m) =>
-        v == batchId && mp == pNew && {
-          verifySchema(spark, dir, v, m, schema, what); true
-        }
-      })
-    if (rebucketLanded) return
-    resolveForFold(spark, dir, batchId, numBuckets, schema, what).foreach {
-      case (p, manifest) =>
-        val pNew = rebucketTo.getOrElse(p)
-        require(pNew > 0, s"rebucketTo must be positive, got $pNew")
-        val merged = fold(read(spark, dir, schema, manifest, None)
-          .drop(BucketCol))
-          .withColumn(BucketCol, bucketOf(col(keyCol), pNew))
-        // prior manifest deliberately dropped from the POINTERS: every
-        // bucket (rows or not) re-homes at batchId, so no pointer can
-        // reach behind the compaction point — while the DEFAULT
-        // keepManifests retains the last 4 manifests' files, the same
-        // reader horizon every normal commit honors
-        commit(merged, dir, batchId, pNew, (0 until pNew).toSet,
-          Map.empty)
+                  targetP: Int, schema: StructType, keyCol: String,
+                  what: String)(fold: DataFrame => DataFrame): Unit =
+    resolveForFold(spark, dir, batchId, targetP, schema, what,
+        requireGrow(dir, targetP, what)).foreach { case (_, manifest) =>
+      val merged = fold(read(spark, dir, schema, manifest, None)
+        .drop(BucketCol))
+        .withColumn(BucketCol, bucketOf(col(keyCol), targetP))
+      // prior manifest deliberately dropped from the POINTERS: every
+      // bucket (rows or not) re-homes at batchId, so no pointer can
+      // reach behind the compaction point — while the DEFAULT
+      // keepManifests retains the last 4 manifests' files, the same
+      // reader horizon every normal commit honors
+      commit(merged, dir, batchId, targetP, (0 until targetP).toSet,
+        Map.empty)
     }
-  }
+
+  /** The grow rule of every bucketed tenant: a write that rewrites every
+    * bucket lays out at its target p, which must be ≥ the on-disk p. A
+    * smaller target is refused — a surviving old binary in a rolling
+    * deploy would otherwise re-bucket the full state back and forth
+    * every trigger; a shrink is a reseed or migration, never a trigger.
+    * Passed as [[resolveForFold]]'s check, so it runs before the retry
+    * fence. */
+  private[streaming] def requireGrow(dir: String, targetP: Int,
+      what: String)(onDiskP: Int): Unit =
+    require(targetP >= onDiskP,
+      s"$what fan-out at $dir can only GROW (on-disk p=$onDiskP, target " +
+        s"$targetP) — a shrink (or a stale binary's old constant) must " +
+        "not re-bucket; reseed or migrate explicitly")
 
   /** Report of one pruned fold — the spec seam for READ-side pruning
     * assertions: `candidateBuckets` is exactly the `want` set the fold
@@ -306,48 +287,25 @@ object BucketedState {
                               dirtyBuckets: Set[Int],
                               unprunedScans: Int = 0)
 
-  /** Shared prelude of every fold: layout check BEFORE the version
-    * fence (against a foreign flat-VersionedState dir whose v= ids
-    * collide with incoming batchIds, a fence-first order would silently
-    * swallow those batches and only throw on the first fresh id), then
-    * the retry short-circuit. None = already committed. Tenants with a
-    * custom read-expansion ([[JoinViewMaintenance]],
-    * [[DupClusterMaintenance]]) share this copy too — the
-    * check-ordering contract must not be re-derived per tenant. */
+  /** Shared prelude of every fold: resolve the newest manifest and
+    * return (on-disk p, manifest), or None when `batchId` already
+    * committed. The fan-out belongs to the dir: an existing dir folds at
+    * the p its manifest records, and `freshP` only lays out an empty
+    * dir. Check order is part of the contract: the layout throw (inside
+    * latestManifest), the schema guard, `check` on the on-disk p, and
+    * the retry fence LAST — a fence-first order would let a foreign or
+    * misconfigured dir whose v= ids collide with incoming batchIds
+    * silently swallow those batches as "already folded" instead of
+    * failing loudly on the very first trigger. Tenants with a custom
+    * read-expansion ([[JoinViewMaintenance]], [[DupClusterMaintenance]])
+    * share this copy too. */
   private[streaming] def resolveForFold(spark: SparkSession, dir: String,
-      batchId: Long, numBuckets: Int, schema: StructType, what: String)
-      : Option[(Int, Map[Int, Long])] =
-    resolveCore(spark, dir, batchId, schema, what,
-      pin = Some(numBuckets), freshP = numBuckets)
-
-  /** [[resolveForFold]] WITHOUT the fan-out pin. Its one caller is the
-    * serving view's write, [[CdcStreamPipeline.foldServing]], which
-    * handles a fan-out change itself (grow-only re-bucket): same layout
-    * check, schema guard, and retry fence, but the caller receives
-    * whatever p the manifest records (`freshP` for an empty dir) and
-    * decides. Every other tenant should keep the pinned form — an
-    * unnoticed p mismatch is a misconfiguration, not a migration. */
-  private[streaming] def resolveForFoldAnyP(spark: SparkSession,
-      dir: String, batchId: Long, schema: StructType, what: String,
-      freshP: Int): Option[(Int, Map[Int, Long])] =
-    resolveCore(spark, dir, batchId, schema, what, pin = None,
-      freshP = freshP)
-
-  /** Shared body of the two resolve forms. Check order is part of the
-    * contract: layout throw (inside latestManifest), then the fan-out
-    * PIN when one is given, then the schema guard, and the retry fence
-    * LAST — a fence-first order would let a misconfigured dir whose v=
-    * ids collide with incoming batchIds silently swallow those batches
-    * as "already folded" instead of failing loudly on the very first
-    * trigger. */
-  private def resolveCore(spark: SparkSession, dir: String, batchId: Long,
-      schema: StructType, what: String, pin: Option[Int], freshP: Int)
-      : Option[(Int, Map[Int, Long])] = {
+      batchId: Long, freshP: Int, schema: StructType, what: String,
+      check: Int => Unit = _ => ()): Option[(Int, Map[Int, Long])] = {
     val (p, manifest) = latestManifest(spark, dir) match {
       case Some((v, mp, m)) =>
-        pin.foreach(nb => require(mp == nb,
-          s"$what at $dir laid out with p=$mp, engine uses $nb"))
         verifySchema(spark, dir, v, m, schema, what)
+        check(mp)
         (mp, m)
       case None => (freshP, Map.empty[Int, Long])
     }
@@ -377,6 +335,19 @@ object BucketedState {
     case _ => Set(p)
   }
 
+  /** Dirs whose on-disk schema already passed [[verifySchema]] this
+    * process — keyed on (latest version id, expected paths), NOT the dir
+    * alone: an out-of-band reseed/migration at the same path (the drift
+    * error's own prescribed recovery) changes the latest version id, so
+    * a still-alive driver that verified the OLD contents re-verifies the
+    * new ones instead of skipping the guard. Within one process the only
+    * other writer is this engine, and [[commit]] refreshes the entry to
+    * its own new version (same driver-side cost as before: no footer
+    * re-inference per micro-batch). A changed expected schema (same dir,
+    * different tenant code path) misses the cache and re-verifies. */
+  private val verifiedDirs =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, Set[String])]()
+
   /** Guard against tenant SCHEMA drift WITHIN the BucketedState layout
     * (a state column renamed or dropped across a deploy — e.g. round
     * 11's vocab key moving from raw shingle strings to fingerprints):
@@ -395,25 +366,6 @@ object BucketedState {
     * walks back through the manifest's referenced versions (newest
     * first) to the first one holding data files; a state with no data
     * files anywhere is legitimately empty. */
-  /** Dirs whose on-disk schema already passed [[verifySchema]] this
-    * process — keyed on (latest version id, expected paths), NOT the dir
-    * alone: an out-of-band reseed/migration at the same path (the drift
-    * error's own prescribed recovery) changes the latest version id, so
-    * a still-alive driver that verified the OLD contents re-verifies the
-    * new ones instead of skipping the guard. Within one process the only
-    * other writer is this engine, and [[commit]] refreshes the entry to
-    * its own new version (same driver-side cost as before: no footer
-    * re-inference per micro-batch). A changed expected schema (same dir,
-    * different tenant code path) misses the cache and re-verifies. */
-  private val verifiedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Set[String])]()
-
-  /** Drop the process-local verification cache for `dir` — for callers
-    * that mutate a state dir outside [[commit]] (tests, manual
-    * surgery). Normal reseeds/migrations don't need it: the cache is
-    * version-keyed, so a new latest version re-verifies on its own. */
-  def invalidateVerified(dir: String): Unit = { verifiedDirs.remove(dir): Unit }
-
   private def verifySchema(spark: SparkSession, dir: String, version: Long,
       manifest: Map[Int, Long], schema: StructType, what: String): Unit = {
     val want = fieldPaths(schema) - BucketCol
@@ -505,10 +457,10 @@ object BucketedState {
     * dirty set derives from the batch's touched keys with
     * partition-pruned reads, never a full-state diff. */
   def foldCommit(spark: SparkSession, dir: String, batchId: Long,
-                 numBuckets: Int, schema: StructType, keyCol: String,
+                 freshP: Int, schema: StructType, keyCol: String,
                  what: String, growOnly: Boolean = false)
                 (fold: DataFrame => DataFrame): Unit =
-    resolveForFold(spark, dir, batchId, numBuckets, schema, what).foreach {
+    resolveForFold(spark, dir, batchId, freshP, schema, what).foreach {
       case (p, manifest) =>
         foldAndCommit(spark, dir, batchId, p, manifest, schema, keyCol,
           growOnly, want = None)(fold)
@@ -535,12 +487,12 @@ object BucketedState {
     * the [[PrunedFold]] report (None when the version fence
     * short-circuited a retry). */
   def foldCommitPruned(spark: SparkSession, dir: String, batchId: Long,
-                       numBuckets: Int, schema: StructType, keyCol: String,
+                       freshP: Int, schema: StructType, keyCol: String,
                        what: String, growOnly: Boolean = false)
                       (batchRel: DataFrame)
                       (fold: (DataFrame, DataFrame) => DataFrame)
       : Option[PrunedFold] =
-    resolveForFold(spark, dir, batchId, numBuckets, schema, what).map {
+    resolveForFold(spark, dir, batchId, freshP, schema, what).map {
       case (p, manifest) =>
         val batch = batchRel
           .localCheckpoint() // feeds candidate derivation AND the fold
@@ -619,27 +571,19 @@ object BucketedState {
       (0 until numBuckets).toSet, Map.empty)
   }
 
-  /** Newest committed full state for a tenant, manifest-resolved, with
-    * the fan-out check of a pinned tenant's reader (the serving view,
-    * whose p may grow, reads every bucket through [[readPruned]]). */
+  /** Newest committed full state of a tenant: every bucket at the
+    * on-disk p, behind the schema guard ([[readPruned]] with all
+    * buckets). */
   def readState(spark: SparkSession, dir: String, schema: StructType,
-                numBuckets: Int, what: String): DataFrame = {
-    val (v, p, manifest) = latestManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no $what state under $dir"))
-    require(p == numBuckets,
-      s"$what at $dir laid out with p=$p, engine uses $numBuckets")
-    verifySchema(spark, dir, v, manifest, schema, what)
-    read(spark, dir, schema, manifest, None)
-  }
+                what: String): DataFrame =
+    readPruned(spark, dir, schema, what)(p => (0 until p).toSet)
 
   /** Manifest-resolved, schema-GUARDED read of selected buckets — the
     * point-lookup read path. `want` receives the RESOLVED fan-out and
     * names the buckets to read, so a reader that derives its bucket
-    * from p (a key lookup) stays correct across re-buckets and through
-    * the grow window between a fan-out-raising deploy and the next
-    * trigger — no pin, because the answer doesn't depend on which p the
-    * writer WILL use, only on the layout that exists. The schema guard
-    * still applies: a wrong/foreign dir fails loudly, never "key
+    * from p (a key lookup) reads the layout that exists, across
+    * re-buckets and before a raised constant's grow lands. The schema
+    * guard applies: a wrong/foreign dir fails loudly, never "key
     * absent". */
   def readPruned(spark: SparkSession, dir: String, schema: StructType,
                  what: String)(want: Int => Set[Int]): DataFrame = {

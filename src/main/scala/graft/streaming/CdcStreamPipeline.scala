@@ -365,27 +365,19 @@ object CdcStreamPipeline {
     * byte-identical. An empty dir owns every bucket, so its first fold
     * skips the candidate job.
     *
-    * GROW-ONLY fan-out: a `targetP` above the on-disk p folds into the
-    * FULL state and re-homes every row at `targetP`, all at this
-    * version (the foldCompact discipline: the id stays the caller's, a
-    * retried grow fences on its own committed version). A `targetP`
-    * below it is refused — a surviving old binary in a rolling deploy
-    * would otherwise re-bucket the full state back and forth every
-    * trigger; a shrink is a reseed or migration, never a trigger.
-    *
-    * resolveForFoldAnyP, not the pinned resolve, so that grow can
-    * happen; a wrong dir still fails loudly on the layout check or on
-    * the schema guard (the envelope struct paths are this tenant's
-    * signature). */
+    * GROW: a `targetP` above the on-disk p folds into the FULL state
+    * and re-homes every row at `targetP`, all at this version (the
+    * foldCompact discipline: the id stays the caller's, a retried grow
+    * fences on its own committed version). A `targetP` below it is
+    * refused ([[BucketedState.requireGrow]]). A wrong dir still fails
+    * loudly on the layout check or on the schema guard (the envelope
+    * struct paths are this tenant's signature). */
   private[graft] def foldServing(envelopes: DataFrame, dir: String,
       versionId: Long, targetP: Int): Unit = {
     val spark = envelopes.sparkSession
-    BucketedState.resolveForFoldAnyP(spark, dir, versionId, servingSchema,
-      "serving view", freshP = targetP).foreach { case (p, manifest) =>
-      require(targetP >= p,
-        s"serving fan-out can only GROW in-stream (on-disk p=$p, " +
-          s"engine asks $targetP) — a shrink (or a stale binary's old " +
-          "constant) must not re-bucket; reseed or migrate explicitly")
+    BucketedState.resolveForFold(spark, dir, versionId, targetP,
+      servingSchema, "serving view", BucketedState.requireGrow(dir,
+        targetP, "serving view")).foreach { case (p, manifest) =>
       val incoming =
         withServingKey(envelopes.select(col("data"), col("metadata")))
       val rewriteAll = manifest.isEmpty || targetP > p
@@ -436,8 +428,7 @@ object CdcStreamPipeline {
     * of the newest manifest, at whatever p it records. */
   private def servingState(spark: SparkSession,
       servingDir: String): DataFrame =
-    BucketedState.readPruned(spark, servingDir, servingSchema,
-      "serving view")(p => (0 until p).toSet)
+    BucketedState.readState(spark, servingDir, servingSchema, "serving view")
 
   /** POINT LOOKUP against the serving state — single-key form of
     * [[servingLookupBatch]]; returns the live row (0 or 1 rows,
@@ -462,9 +453,8 @@ object CdcStreamPipeline {
     * Key derivation executes the WRITE PATH's own expressions
     * ([[servingKeyExpr]] / [[BucketedState.bucketOf]]) on literals
     * driver-side — no Spark job, and no re-implemented hash to drift
-    * (round-12 ADVICE item 3). No fan-out pin: buckets derive from the
-    * on-disk p, so lookups keep answering through the grow window
-    * between a fan-out-raising deploy and the next trigger's re-bucket.
+    * (round-12 ADVICE item 3). Buckets derive from the on-disk p, so
+    * lookups answer before and after a grow alike.
     * The fingerprint prefilter prunes; the exact composite join
     * decides — a 64-bit collision can only co-locate keys, never
     * confuse them. */

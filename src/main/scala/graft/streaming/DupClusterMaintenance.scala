@@ -42,12 +42,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * untouched bucket carries forward as a manifest pointer. Write
   * amplification is O(changed labels), bounded by the batch's
   * connectivity effect. Ids must be long (the repo-wide doc-id type).
-  * NOTE (pre-release layout history): round 10 moved this shelf from
-  * flat VersionedState snapshots to BucketedState with no migration
-  * path — an old-layout dir fails loudly ("not a BucketedState
-  * layout"); reseed by re-folding, or one-shot migrate by committing
-  * the old latestSnapshot at a reserved id (see SCALE.md "state-layout
-  * migrations").
+  * A flat VersionedState dir fails loudly ("not a BucketedState
+  * layout"); reseed by re-folding, or migrate it once through
+  * [[BucketedState.migrateFromVersionedState]].
   *
   * Exactly-once: cluster folding is NOT idempotent under retry in
   * general (a re-run could observe torn state mid-write), so each fold
@@ -56,10 +53,12 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * a no-op (DupClusterSpec/StreamingSpec discipline). */
 object DupClusterMaintenance {
 
-  /** Bucket fan-out; fixed for the life of a label dir. */
+  /** Fan-out at which a fresh label dir is laid out, and the target of
+    * [[compactUpdate]]'s rewrite. An existing dir folds at the p its
+    * newest manifest records. */
   val NumBuckets = 8
 
-  private val stateSchema = StructType(Seq(
+  private[graft] val stateSchema = StructType(Seq(
     StructField("id", LongType), StructField("cluster", LongType),
     StructField(BucketedState.BucketCol, IntegerType)))
 
@@ -72,11 +71,10 @@ object DupClusterMaintenance {
     * columns) that bucket pruning cannot bound — this tenant is NOT
     * fully read-pruned and its report says so. None = retried batch
     * short-circuited by the version fence. */
-  def update(labelDir: String, pairs: DataFrame, batchId: Long,
-             numBuckets: Int = NumBuckets)
+  def update(labelDir: String, pairs: DataFrame, batchId: Long)
       : Option[BucketedState.PrunedFold] = {
     val spark = pairs.sparkSession
-    BucketedState.resolveForFold(spark, labelDir, batchId, numBuckets,
+    BucketedState.resolveForFold(spark, labelDir, batchId, NumBuckets,
       stateSchema, "labels").map { case (p, manifest) =>
       def readBuckets(want: Option[Set[Int]]): DataFrame =
         BucketedState.read(spark, labelDir, stateSchema, manifest, want)
@@ -137,13 +135,11 @@ object DupClusterMaintenance {
     * label relation (the closure over everything — exact by the same
     * argument as phase 2, just unpruned: a compaction is an O(state)
     * rewrite by definition) and republish every bucket at this batch's
-    * id; `rebucketTo` additionally re-homes the labels under a new
-    * fan-out in the same atomic rewrite. */
-  def compactUpdate(labelDir: String, pairs: DataFrame, batchId: Long,
-                    numBuckets: Int = NumBuckets,
-                    rebucketTo: Option[Int] = None): Unit =
+    * id, laid out at [[NumBuckets]]. */
+  def compactUpdate(labelDir: String, pairs: DataFrame,
+                    batchId: Long): Unit =
     BucketedState.foldCompact(pairs.sparkSession, labelDir, batchId,
-      numBuckets, stateSchema, "id", "labels", rebucketTo) { prev =>
+      NumBuckets, stateSchema, "id", "labels") { prev =>
       val edges = pairs.toDF("a", "b")
         .select(col("a").cast("long").as("a"),
           col("b").cast("long").as("b"))
@@ -154,8 +150,7 @@ object DupClusterMaintenance {
     }
 
   /** Newest committed label relation `(id, cluster)`. */
-  def labels(spark: SparkSession, labelDir: String,
-             numBuckets: Int = NumBuckets): DataFrame =
-    BucketedState.readState(spark, labelDir, stateSchema, numBuckets,
-      "labels").select(col("id"), col("cluster"))
+  def labels(spark: SparkSession, labelDir: String): DataFrame =
+    BucketedState.readState(spark, labelDir, stateSchema, "labels")
+      .select(col("id"), col("cluster"))
 }

@@ -58,10 +58,11 @@ import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructT
   * sides, fk re-pointing, and the retry guard. */
 object JoinViewMaintenance {
 
-  /** Bucket fan-out of the state layout. Fixed for the life of a state
-    * dir (the bucket function is part of the on-disk contract). Local
-    * tests keep it small so multi-bucket pruning is visible; a cluster
-    * deployment sizes it like shuffle partitions (state / ~128 MB). */
+  /** Fan-out at which a fresh state dir is laid out, and the target of
+    * [[compactUpdate]]'s rewrite. An existing dir folds at the p its
+    * newest manifest records. Local tests keep it small so multi-bucket
+    * pruning is visible; a cluster deployment sizes it like shuffle
+    * partitions (state / ~128 MB). */
   val NumBuckets = 8
 
   /** Unified single-relation state (one atomic commit per batch):
@@ -69,7 +70,7 @@ object JoinViewMaintenance {
     * rel = 'R' (k1 = join key, pay1 = right payload),
     * rel = 'V' (k1 = pk, k2 = fk, pay1 = left, pay2 = right).
     * Every row buckets on k1. */
-  private val stateSchema = StructType(Seq(
+  private[graft] val stateSchema = StructType(Seq(
     StructField("rel", StringType), StructField("k1", StringType),
     StructField("k2", StringType), StructField("pay1", StringType),
     StructField("pay2", StringType),
@@ -102,12 +103,12 @@ object JoinViewMaintenance {
     * key per batch (pre-collapsed). Either side may be empty but must
     * carry its schema. */
   def update(dir: String, batchL: DataFrame, batchR: DataFrame,
-             batchId: Long, numBuckets: Int = NumBuckets): Unit = {
+             batchId: Long): Unit = {
     val spark = batchL.sparkSession
     // shared prelude: layout check BEFORE the version fence, then the
     // retry short-circuit (one copy of the ordering contract)
     val (p, manifest) = BucketedState.resolveForFold(spark, dir, batchId,
-      numBuckets, stateSchema, "join view") match {
+      NumBuckets, stateSchema, "join view") match {
       case Some(pm) => pm
       case None     => return
     }
@@ -166,17 +167,15 @@ object JoinViewMaintenance {
   }
 
   /** [[update]]'s COMPACTING form: fold the batch into the FULL state
-    * and republish every bucket at this batch's id; `rebucketTo`
-    * additionally re-homes the state under a new fan-out in the same
-    * atomic rewrite. The view relation is REBUILT wholesale from the
+    * and republish every bucket at this batch's id, laid out at
+    * [[NumBuckets]]. The view relation is REBUILT wholesale from the
     * merged sides (V is a pure function of L and R, and a compaction is
     * an O(state) rewrite by definition — recomputing it here keeps zero
     * incremental bookkeeping on the slow path). */
   def compactUpdate(dir: String, batchL: DataFrame, batchR: DataFrame,
-                    batchId: Long, numBuckets: Int = NumBuckets,
-                    rebucketTo: Option[Int] = None): Unit =
+                    batchId: Long): Unit =
     BucketedState.foldCompact(batchL.sparkSession, dir, batchId,
-      numBuckets, stateSchema, "k1", "join view", rebucketTo) { prev =>
+      NumBuckets, stateSchema, "k1", "join view") { prev =>
       val newL = lww(prev.filter(col("rel") === "L"), batchL, asL)
       val newR = lww(prev.filter(col("rel") === "R"), batchR, asR)
       val newV = newL.select(col("k1"), col("k2"), col("pay1").as("lp"))
@@ -187,27 +186,16 @@ object JoinViewMaintenance {
       newL.unionByName(newR).unionByName(newV)
     }
 
-  private def readAll(spark: SparkSession, dir: String,
-                      numBuckets: Int = NumBuckets): DataFrame = {
-    val (_, p, manifest) = BucketedState.latestManifest(spark, dir)
-      .getOrElse(throw new IllegalStateException(
-        s"no join-view state under $dir"))
-    require(p == numBuckets,
-      s"state at $dir was laid out with p=$p, engine uses $numBuckets")
-    BucketedState.read(spark, dir, stateSchema, manifest, None)
-  }
-
   /** Newest committed view `(pk, fk, left_payload, right_payload)`. */
-  def view(spark: SparkSession, dir: String,
-           numBuckets: Int = NumBuckets): DataFrame =
-    readAll(spark, dir, numBuckets)
+  def view(spark: SparkSession, dir: String): DataFrame =
+    BucketedState.readState(spark, dir, stateSchema, "join view")
       .filter(col("rel") === "V")
       .select(col("k1").as("pk"), col("k2").as("fk"),
         col("pay1").as("left_payload"), col("pay2").as("right_payload"))
 
   /** Current left/right side snapshots (for parity checks and reseeds). */
   def sides(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val st = readAll(spark, dir)
+    val st = BucketedState.readState(spark, dir, stateSchema, "join view")
     (st.filter(col("rel") === "L")
       .select(col("k1").as("pk"), col("k2").as("fk"),
         col("pay1").as("payload")),

@@ -31,10 +31,12 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * ingest volume, making the served histogram metadata-sized forever. */
 object StatsMaintenance {
 
-  /** Bucket fan-out; fixed for the life of a stats dir. */
+  /** Fan-out at which a fresh stats dir is laid out, and the target of
+    * [[compactUpdate]]'s rewrite. An existing dir folds at the p its
+    * newest manifest records. */
   val NumBuckets = 8
 
-  private val stateSchema = StructType(Seq(
+  private[graft] val stateSchema = StructType(Seq(
     StructField("v", LongType), StructField("cnt", LongType),
     StructField(BucketedState.BucketCol, IntegerType)))
 
@@ -45,11 +47,10 @@ object StatsMaintenance {
     * strictly increasing on positive deltas) and dirty keys = batch
     * keys. Returns the pruned-fold report (None = retried batch
     * short-circuited by the version fence). */
-  def update(dir: String, values: DataFrame, batchId: Long,
-             numBuckets: Int = NumBuckets)
+  def update(dir: String, values: DataFrame, batchId: Long)
       : Option[BucketedState.PrunedFold] =
     BucketedState.foldCommitPruned(values.sparkSession, dir, batchId,
-      numBuckets, stateSchema, "v", "stats", growOnly = true)(
+      NumBuckets, stateSchema, "v", "stats", growOnly = true)(
       batchCounts(values)) { (prev, batch) =>
       prev.unionByName(batch)
         .groupBy("v").agg(sum(col("cnt")).as("cnt"))
@@ -69,19 +70,16 @@ object StatsMaintenance {
     * bound), at the ENGINE'S OWN batchId — that keeps the id sequence
     * the engine's, which is what makes in-stream compaction safe for
     * foreachBatch-driven tenants (BucketedState ID-COORDINATION). */
-  def compactUpdate(dir: String, values: DataFrame, batchId: Long,
-                    numBuckets: Int = NumBuckets,
-                    rebucketTo: Option[Int] = None): Unit =
+  def compactUpdate(dir: String, values: DataFrame, batchId: Long): Unit =
     BucketedState.foldCompact(values.sparkSession, dir, batchId,
-      numBuckets, stateSchema, "v", "stats", rebucketTo) { prev =>
+      NumBuckets, stateSchema, "v", "stats") { prev =>
       prev.unionByName(batchCounts(values))
         .groupBy("v").agg(sum(col("cnt")).as("cnt"))
     }
 
   /** Newest committed value-count relation `(v, cnt)`. */
-  def valueCounts(spark: SparkSession, dir: String,
-                  numBuckets: Int = NumBuckets): DataFrame =
-    BucketedState.readState(spark, dir, stateSchema, numBuckets, "stats")
+  def valueCounts(spark: SparkSession, dir: String): DataFrame =
+    BucketedState.readState(spark, dir, stateSchema, "stats")
       .select(col("v"), col("cnt"))
 
   /** q216's equi-depth histogram over any `(v, cnt)` relation:

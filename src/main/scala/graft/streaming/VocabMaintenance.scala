@@ -45,10 +45,12 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * curve this feeds; a collision under-counts `vocab` by exactly 1). */
 object VocabMaintenance {
 
-  /** Bucket fan-out; fixed for the life of a vocabulary dir. */
+  /** Fan-out at which a fresh vocabulary dir is laid out, and the
+    * target of [[compactUpdate]]'s rewrite. An existing dir folds at the
+    * p its newest manifest records. */
   val NumBuckets = 8
 
-  private val stateSchema = StructType(Seq(
+  private[graft] val stateSchema = StructType(Seq(
     StructField("f", LongType), StructField("first_doc", LongType),
     StructField(BucketedState.BucketCol, IntegerType)))
 
@@ -68,36 +70,30 @@ object VocabMaintenance {
     * per-key MIN (key-local), so the pruned path is exact: dirty keys
     * ⊆ batch keys by construction. Returns the pruned-fold report
     * (None = retried batch short-circuited by the version fence). */
-  def update(dir: String, docs: DataFrame, batchId: Long,
-             numBuckets: Int = NumBuckets)
+  def update(dir: String, docs: DataFrame, batchId: Long)
       : Option[BucketedState.PrunedFold] =
     BucketedState.foldCommitPruned(docs.sparkSession, dir, batchId,
-      numBuckets, stateSchema, "f", "vocabulary", growOnly = true)(
+      NumBuckets, stateSchema, "f", "vocabulary", growOnly = true)(
       batchMins(docs)) { (prev, batch) =>
       prev.unionByName(batch)
         .groupBy("f").agg(min(col("first_doc")).as("first_doc"))
     }
 
   /** [[update]]'s COMPACTING form — same MIN fold published through
-    * [[BucketedState.foldCompact]]; `rebucketTo` additionally re-homes
-    * the vocabulary under a new fan-out in the same atomic rewrite (the
-    * StatsMaintenance.compactUpdate discipline: call INSTEAD of update
-    * at the engine's own batchId). */
-  def compactUpdate(dir: String, docs: DataFrame, batchId: Long,
-                    numBuckets: Int = NumBuckets,
-                    rebucketTo: Option[Int] = None): Unit =
-    BucketedState.foldCompact(docs.sparkSession, dir, batchId, numBuckets,
-      stateSchema, "f", "vocabulary", rebucketTo) { prev =>
+    * [[BucketedState.foldCompact]] (the StatsMaintenance.compactUpdate
+    * discipline: call INSTEAD of update at the engine's own batchId). */
+  def compactUpdate(dir: String, docs: DataFrame, batchId: Long): Unit =
+    BucketedState.foldCompact(docs.sparkSession, dir, batchId, NumBuckets,
+      stateSchema, "f", "vocabulary") { prev =>
       prev.unionByName(batchMins(docs))
         .groupBy("f").agg(min(col("first_doc")).as("first_doc"))
     }
 
   /** Newest committed first-seen relation `(f, first_doc)` — keys are
     * shingle fingerprints. */
-  def firstSeen(spark: SparkSession, dir: String,
-                numBuckets: Int = NumBuckets): DataFrame =
-    BucketedState.readState(spark, dir, stateSchema, numBuckets,
-      "vocabulary").select(col("f"), col("first_doc"))
+  def firstSeen(spark: SparkSession, dir: String): DataFrame =
+    BucketedState.readState(spark, dir, stateSchema, "vocabulary")
+      .select(col("f"), col("first_doc"))
 
   /** The q203-shaped growth curve served FROM STATE: (docs_seen,
     * new_shingles, vocab) per `bucketDocs`-document prefix. */

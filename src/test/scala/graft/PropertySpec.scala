@@ -760,7 +760,7 @@ class PropertySpec extends SparkTestBase {
         df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val prunedServed = vcMap(StatsMaintenance.valueCounts(spark, rootA))
       val fullServed = vcMap(BucketedState.readState(spark, rootB, schema,
-        StatsMaintenance.NumBuckets, "stats").select(col("v"), col("cnt")))
+        "stats").select(col("v"), col("cnt")))
       assert(prunedServed === model, s"run $run: pruned fold diverged")
       assert(fullServed === model, s"run $run: full fold diverged")
     }

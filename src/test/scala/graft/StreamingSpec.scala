@@ -1384,7 +1384,7 @@ class StreamingSpec extends SparkTestBase {
       }
     }
     assert(fsMap(BucketedState.readState(spark, shelfFull, fullSchema,
-        VocabMaintenance.NumBuckets, "vocabulary")
+        "vocabulary")
       .select(col("f"), col("first_doc"))) ===
       fsMap(VocabMaintenance.firstSeen(spark, shelf)))
 
@@ -1558,32 +1558,35 @@ class StreamingSpec extends SparkTestBase {
     vs.toDF("v").groupBy("v").agg(count(lit(1)).as("cnt"))
   }
 
-  private def vfold(dir: String, id: Long, p: Int, vs: Seq[Long])
+  private def vfold(dir: String, id: Long, vs: Seq[Long])
       : Option[graft.streaming.BucketedState.PrunedFold] =
-    graft.streaming.BucketedState.foldCommitPruned(spark, dir, id, p,
+    graft.streaming.BucketedState.foldCommitPruned(spark, dir, id, 8,
       vcntSchema, "v", "vcnt", growOnly = true)(vcounts(vs)) {
       (prev, batch) => prev.unionByName(batch)
         .groupBy("v").agg(sum(col("cnt")).as("cnt"))
     }
 
-  private def vread(dir: String, p: Int): Map[Long, Long] =
-    graft.streaming.BucketedState.readState(spark, dir, vcntSchema, p, "vcnt")
+  private def vread(dir: String): Map[Long, Long] =
+    graft.streaming.BucketedState.readState(spark, dir, vcntSchema, "vcnt")
       .select(col("v"), col("cnt"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  test("re-bucketing via foldCompact: tenant grows p=8 to p=16 mid-stream; folds continue above at the new fan-out; parity held; old fan-out rejected") {
+  test("re-bucketing via foldCompact: a tenant grows p=8 to p=16 mid-stream; folds continue above at the on-disk fan-out; parity held; shrink refused before the retry fence") {
     import graft.streaming.BucketedState
     val shelf = tmpDir("rebucket_state") + "/vcnt"
-    vfold(shelf, 0L, 8, Seq(1L, 2L, 3L, 1L))
-    vfold(shelf, 1L, 8, Seq(2L, 4L))
-    val before = vread(shelf, 8)
-    assert(before === Map(1L -> 2L, 2L -> 2L, 3L -> 1L, 4L -> 1L))
+    vfold(shelf, 0L, Seq(1L, 2L, 3L, 1L))
+    vfold(shelf, 1L, Seq(2L, 4L))
+    assert(BucketedState.latestManifest(spark, shelf).get._2 === 8)
+    assert(vread(shelf) === Map(1L -> 2L, 2L -> 2L, 3L -> 1L, 4L -> 1L))
 
     // the growth trigger: fold batch 2 AND re-home every row under p=16
     // in the same atomic rewrite (SCALE.md sizes p ≈ state / 128 MB — a
     // growing tenant must be able to raise p without a reseed)
-    BucketedState.foldCompact(spark, shelf, 2L, 8, vcntSchema, "v", "vcnt",
-      rebucketTo = Some(16)) { prev =>
+    def grow2(fold: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame): Unit =
+      BucketedState.foldCompact(spark, shelf, 2L, 16, vcntSchema, "v",
+        "vcnt")(fold)
+    grow2 { prev =>
       prev.unionByName(vcounts(Seq(5L, 1L)))
         .groupBy("v").agg(sum(col("cnt")).as("cnt"))
     }
@@ -1597,51 +1600,47 @@ class StreamingSpec extends SparkTestBase {
       .select(BucketedState.bucketOf(col("v"), 16)).distinct()
       .collect().map(_.getInt(0)).toSet
     assert(BucketedState.bucketDirs(spark, shelf, 2L) === expectedDirs)
-    assert(vread(shelf, 16) ===
+    assert(vread(shelf) ===
       Map(1L -> 3L, 2L -> 2L, 3L -> 1L, 4L -> 1L, 5L -> 1L))
 
-    // RETRIED re-bucketing batch (crash after the rename, before the
-    // checkpoint offset commit): the manifest already reads p=16, so
-    // the pin check against the OLD numBuckets would crash-loop — the
-    // dedicated fence must no-op instead, leaving state untouched
-    BucketedState.foldCompact(spark, shelf, 2L, 8, vcntSchema, "v", "vcnt",
-      rebucketTo = Some(16)) { prev =>
-      fail("retried re-bucket batch must fence, not refold"); prev
-    }
-    assert(vread(shelf, 16) ===
+    // RETRIED grow batch (crash after the rename, before the checkpoint
+    // offset commit): the ordinary retry fence finds its own version
+    grow2 { prev => fail("retried grow batch must fence, not refold"); prev }
+    assert(vread(shelf) ===
       Map(1L -> 3L, 2L -> 2L, 3L -> 1L, 4L -> 1L, 5L -> 1L))
 
-    // folds continue ABOVE the re-bucket at the new fan-out; a
-    // single-value batch prunes to its p=16 bucket
-    vfold(shelf, 3L, 16, Seq(4L, 6L))
-    val rep = vfold(shelf, 4L, 16, Seq(9L))
+    // folds continue ABOVE the grow at the on-disk fan-out (vfold's 8
+    // only lays out an empty dir); a single-value batch prunes to its
+    // p=16 bucket
+    vfold(shelf, 3L, Seq(4L, 6L))
+    val rep = vfold(shelf, 4L, Seq(9L))
       .getOrElse(fail("fresh batch must fold, not fence"))
     val b9 = vcounts(Seq(9L))
       .select(BucketedState.bucketOf(col("v"), 16)).collect().head.getInt(0)
     assert(rep.candidateBuckets === Set(b9) && rep.dirtyBuckets === Set(b9))
     assert(rep.unprunedScans === 0)
-    assert(vread(shelf, 16) === Map(1L -> 3L, 2L -> 2L, 3L -> 1L,
+    assert(BucketedState.latestManifest(spark, shelf).get._2 === 16)
+    assert(vread(shelf) === Map(1L -> 3L, 2L -> 2L, 3L -> 1L,
       4L -> 2L, 5L -> 1L, 6L -> 1L, 9L -> 1L))
 
-    // the fan-out pin survives the re-bucket: the OLD p is now foreign
-    val err = intercept[IllegalArgumentException] {
-      vfold(shelf, 5L, 8, Seq(1L))
+    // a compacting fold at a target BELOW the on-disk p is refused
+    // (grow-only) — at a fresh id, and at an already-committed id (4),
+    // because the check runs before the retry fence
+    Seq(5L, 4L).foreach { id =>
+      val err = intercept[IllegalArgumentException] {
+        BucketedState.foldCompact(spark, shelf, id, 8, vcntSchema, "v",
+          "vcnt") { prev => fail("a shrink must not fold"); prev }
+      }
+      assert(err.getMessage.contains("GROW") &&
+        err.getMessage.contains("p=16"), err.getMessage)
     }
-    assert(err.getMessage.contains("p=16"))
-    // ...and the pin runs BEFORE the retry fence: a replayed batch id
-    // that IS committed (id 4) against the wrong fan-out must still
-    // throw, never silently fence as "already folded" — the check
-    // ordering that keeps a misconfigured dir with colliding v= ids
-    // from swallowing batches
-    val err2 = intercept[IllegalArgumentException] {
-      vfold(shelf, 4L, 8, Seq(1L))
-    }
-    assert(err2.getMessage.contains("p=16"))
+    assert(BucketedState.latestManifest(spark, shelf).get._1 === 4L)
   }
 
-  test("re-bucket matrix: every BucketedState tenant family (vocab, stats, join-view, dup-cluster) grows 8→16 via its compacting fold — parity with plain folds, fenced retry, old fan-out rejected") {
-    import graft.streaming.{DupClusterMaintenance, JoinViewMaintenance,
-      StatsMaintenance, VocabMaintenance}
+  test("re-bucket matrix: every BucketedState tenant family (vocab, stats, join-view, dup-cluster) compacts at its constant, grows 8→16 through foldCompact and folds on at the on-disk p — parity with plain folds, fenced retry, shrink refused, readers follow the on-disk p") {
+    import graft.streaming.{BucketedState, DupClusterMaintenance,
+      JoinViewMaintenance, StatsMaintenance, VocabMaintenance}
+    import org.apache.spark.sql.types.StructType
     import spark.implicits._
 
     // fixed per-batch inputs, overlapping keys across batches so every
@@ -1656,70 +1655,81 @@ class StreamingSpec extends SparkTestBase {
       1 -> Seq((3L, 10L, "c1", "upsert"), (2L, 20L, "b1", "delete")),
       2 -> Seq((4L, 30L, "d1", "upsert")),
       3 -> Seq((1L, 20L, "a2", "upsert")),
-      4 -> Seq((9L, 10L, "e1", "upsert"))) // only the pin-check probe
+      4 -> Seq((9L, 10L, "e1", "upsert"))) // only the shrink probe
     val rB: Map[Int, Seq[(Long, String, String)]] = Map(
       0 -> Seq((10L, "X", "upsert"), (20L, "Y", "upsert")),
       1 -> Seq((10L, "X2", "upsert")),
       2 -> Seq((30L, "Z", "upsert")),
       3 -> Seq((20L, "Y2", "upsert")),
-      4 -> Seq((40L, "W", "upsert"))) // only the pin-check probe
+      4 -> Seq((40L, "W", "upsert"))) // only the shrink probe
     def edgesB(i: Int) = Map(
       0 -> Seq((1L, 2L), (3L, 4L)), 1 -> Seq((2L, 3L)),
       2 -> Seq((5L, 6L)), 3 -> Seq((4L, 5L)),
-      4 -> Seq((7L, 8L)))(i).toDF("a_id", "b_id") // 4: pin-check probe
+      4 -> Seq((7L, 8L)))(i).toDF("a_id", "b_id") // 4: shrink probe
 
+    // fold/compact take (dir, version id, input batch index)
     case class T(name: String,
                  fold: (String, Long, Int) => Unit,
-                 compact: (String, Long, Int, Option[Int]) => Unit,
-                 read: (String, Int) => Set[String])
+                 compact: (String, Long, Int) => Unit,
+                 schema: StructType, key: String,
+                 read: String => Set[String])
     def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
       df.collect().map(_.toString).toSet
+    def jvL(i: Int) = lB(i).toDF("pk", "fk", "payload", "op")
+    def jvR(i: Int) = rB(i).toDF("pk", "payload", "op")
     val tenants = Seq(
       T("vocab",
-        (d, id, p) => VocabMaintenance.update(d, docsB(id.toInt), id, p): Unit,
-        (d, id, p, to) => VocabMaintenance.compactUpdate(d, docsB(id.toInt), id, p, to),
-        (d, p) => rows(VocabMaintenance.firstSeen(spark, d, p))),
+        (d, id, i) => VocabMaintenance.update(d, docsB(i), id): Unit,
+        (d, id, i) => VocabMaintenance.compactUpdate(d, docsB(i), id),
+        VocabMaintenance.stateSchema, "f",
+        d => rows(VocabMaintenance.firstSeen(spark, d))),
       T("stats",
-        (d, id, p) => StatsMaintenance.update(d, valsB(id.toInt), id, p): Unit,
-        (d, id, p, to) => StatsMaintenance.compactUpdate(d, valsB(id.toInt), id, p, to),
-        (d, p) => rows(StatsMaintenance.valueCounts(spark, d, p))),
+        (d, id, i) => StatsMaintenance.update(d, valsB(i), id): Unit,
+        (d, id, i) => StatsMaintenance.compactUpdate(d, valsB(i), id),
+        StatsMaintenance.stateSchema, "v",
+        d => rows(StatsMaintenance.valueCounts(spark, d))),
       T("join-view",
-        (d, id, p) => JoinViewMaintenance.update(d,
-          lB(id.toInt).toDF("pk", "fk", "payload", "op"),
-          rB(id.toInt).toDF("pk", "payload", "op"), id, p),
-        (d, id, p, to) => JoinViewMaintenance.compactUpdate(d,
-          lB(id.toInt).toDF("pk", "fk", "payload", "op"),
-          rB(id.toInt).toDF("pk", "payload", "op"), id, p, to),
-        (d, p) => rows(JoinViewMaintenance.view(spark, d, p))),
+        (d, id, i) => JoinViewMaintenance.update(d, jvL(i), jvR(i), id),
+        (d, id, i) => JoinViewMaintenance.compactUpdate(d, jvL(i), jvR(i), id),
+        JoinViewMaintenance.stateSchema, "k1",
+        d => rows(JoinViewMaintenance.view(spark, d))),
       T("dup-cluster",
-        (d, id, p) => DupClusterMaintenance.update(d, edgesB(id.toInt), id, p): Unit,
-        (d, id, p, to) => DupClusterMaintenance.compactUpdate(d, edgesB(id.toInt), id, p, to),
-        (d, p) => rows(DupClusterMaintenance.labels(spark, d, p))))
+        (d, id, i) => DupClusterMaintenance.update(d, edgesB(i), id): Unit,
+        (d, id, i) => DupClusterMaintenance.compactUpdate(d, edgesB(i), id),
+        DupClusterMaintenance.stateSchema, "id",
+        d => rows(DupClusterMaintenance.labels(spark, d))))
 
     tenants.foreach { t =>
-      // reference: the same four batches folded PLAINLY at p=8
+      // reference: the same four batches folded PLAINLY at the constant
       val ref = tmpDir(s"rbm_${t.name}_ref") + "/state"
-      (0 to 3).foreach(i => t.fold(ref, i.toLong, 8))
-      val expect = t.read(ref, 8)
+      (0 to 3).foreach(i => t.fold(ref, i.toLong, i))
+      val expect = t.read(ref)
       assert(expect.nonEmpty, s"${t.name}: reference state empty — vacuous")
 
-      // device under test: 2 plain folds at 8, batch 2 compacts AND
-      // re-homes 8→16, batch 3 folds above at the new fan-out
+      // device under test: 2 plain folds at the constant, batch 2
+      // through the tenant's own compacting fold (and its retry, which
+      // must fence, not refold), an identity grow 8→16 at id 3, and
+      // batch 3 folded plainly above it at the on-disk p
       val dut = tmpDir(s"rbm_${t.name}") + "/state"
-      t.fold(dut, 0L, 8)
-      t.fold(dut, 1L, 8)
-      t.compact(dut, 2L, 8, Some(16))
-      // retried re-bucket batch (crash after rename, before offset
-      // commit — so no later version exists): must fence, not refold
-      t.compact(dut, 2L, 8, Some(16))
-      t.fold(dut, 3L, 16)
-      assert(t.read(dut, 16) === expect,
+      t.fold(dut, 0L, 0)
+      t.fold(dut, 1L, 1)
+      t.compact(dut, 2L, 2)
+      t.compact(dut, 2L, 2)
+      assert(BucketedState.latestManifest(spark, dut).get._2 === 8)
+      BucketedState.foldCompact(spark, dut, 3L, 16, t.schema, t.key,
+        t.name)(identity)
+      t.fold(dut, 4L, 3)
+      val (v, p, _) = BucketedState.latestManifest(spark, dut).get
+      assert(v === 4L && p === 16, s"${t.name}: v=$v p=$p")
+      // the reader names no fan-out and answers at p=16
+      assert(t.read(dut) === expect,
         s"${t.name}: state diverged after the 8→16 re-bucket")
 
-      // the old fan-out is foreign after the grow — loud, not silent
-      val err = intercept[IllegalArgumentException](t.fold(dut, 4L, 8))
-      assert(err.getMessage.contains("p=16"),
-        s"${t.name}: old fan-out not rejected: ${err.getMessage}")
+      // the tenant's compacting fold targets its constant (8), which
+      // would shrink the p=16 dir — refused, loud, not silent
+      val err = intercept[IllegalArgumentException](t.compact(dut, 5L, 4))
+      assert(err.getMessage.contains("GROW") && err.getMessage.contains("p=16"),
+        s"${t.name}: shrink not refused: ${err.getMessage}")
     }
   }
 
@@ -1747,8 +1757,8 @@ class StreamingSpec extends SparkTestBase {
     // drifted schema at a NEW version id — the next read must re-verify
     // and throw, not skip on the stale per-dir cache entry
     val shelf2 = tmpDir("reseed_cache") + "/vcnt"
-    vfold(shelf2, 0L, 8, Seq(1L, 2L))
-    assert(vread(shelf2, 8) === Map(1L -> 1L, 2L -> 1L)) // cache primed
+    vfold(shelf2, 0L, Seq(1L, 2L))
+    assert(vread(shelf2) === Map(1L -> 1L, 2L -> 1L)) // cache primed
     val side = tmpDir("reseed_side") + "/vcnt"
     BucketedState.commit(drifted, side, 1L, 8, (0 until 8).toSet, Map.empty)
     val fs = new org.apache.hadoop.fs.Path(shelf2)
@@ -1756,9 +1766,24 @@ class StreamingSpec extends SparkTestBase {
     fs.delete(new org.apache.hadoop.fs.Path(s"$shelf2/v=0"), true)
     assert(fs.rename(new org.apache.hadoop.fs.Path(s"$side/v=1"),
       new org.apache.hadoop.fs.Path(s"$shelf2/v=1")))
-    val err2 = intercept[IllegalStateException] { vread(shelf2, 8) }
+    val err2 = intercept[IllegalStateException] { vread(shelf2) }
     assert(err2.getMessage.contains("v=1"),
       s"reseed at the same path must re-verify: ${err2.getMessage}")
+
+    // the join view's readers go through the same guard: a dir whose
+    // right-payload column is renamed fails instead of reading NULLs
+    val jvShelf = tmpDir("jv_drift") + "/jv"
+    val jvDrifted = Seq(("V", "1", "10", "a1", "X")).toDF("rel", "k1", "k2",
+        "pay1", "right_payload")
+      .withColumn(BucketedState.BucketCol,
+        BucketedState.bucketOf(col("k1"), 8))
+    BucketedState.commit(jvDrifted, jvShelf, 0L, 8, (0 until 8).toSet,
+      Map.empty)
+    val err3 = intercept[IllegalStateException] {
+      graft.streaming.JoinViewMaintenance.view(spark, jvShelf).collect()
+    }
+    assert(err3.getMessage.contains("pay2"),
+      s"join-view read must hit the drift guard: ${err3.getMessage}")
   }
 
   test("flat VersionedState migration: one-shot migrate at a reserved id in place; replayed pre-migration batches fence; folds resume on top; unmigrated dirs still throw") {
@@ -1772,25 +1797,25 @@ class StreamingSpec extends SparkTestBase {
 
     // unmigrated: the bucketed engine refuses the foreign layout — on
     // read AND on fold — rather than treating prior state as empty
-    intercept[IllegalStateException] { vread(flat, 8) }
-    intercept[IllegalStateException] { vfold(flat, 2L, 8, Seq(9L)) }
+    intercept[IllegalStateException] { vread(flat) }
+    intercept[IllegalStateException] { vfold(flat, 2L, Seq(9L)) }
 
     // one-shot in-place migration: latest flat snapshot re-homes under
     // the bucketed layout at the reserved id -1, below the whole stream
     // sequence
     BucketedState.migrateFromVersionedState(spark, flat, flat, vcntSchema,
       "v", 8)
-    assert(vread(flat, 8) === Map(1L -> 2L, 2L -> 1L, 3L -> 1L))
+    assert(vread(flat) === Map(1L -> 2L, 2L -> 1L, 3L -> 1L))
     val (mv, mp, _) = BucketedState.latestManifest(spark, flat).get
     assert(mv === -1L && mp === 8)
 
     // the old flat v= dirs stay honored as retry fences: a replayed
     // pre-migration batch (its fold is IN the migrated snapshot) skips
-    assert(vfold(flat, 1L, 8, Seq(99L)).isEmpty,
+    assert(vfold(flat, 1L, Seq(99L)).isEmpty,
       "replayed pre-migration batch must fence, not refold")
     // ...and fresh engine ids fold on top as ordinary prior state
-    vfold(flat, 2L, 8, Seq(3L, 4L))
-    assert(vread(flat, 8) ===
+    vfold(flat, 2L, Seq(3L, 4L))
+    assert(vread(flat) ===
       Map(1L -> 2L, 2L -> 1L, 3L -> 2L, 4L -> 1L))
 
     // a live bucketed tenant refuses a second migration over itself
