@@ -20,19 +20,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.extensions", "graft.GraftExtensions")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-
     /** Per-query isolation, round-10 form. Round 7 added a per-query
       * cleanse (clearCache + async unpersist) after one hot JVM running
       * the whole board contaminated late queries; round 9 showed the
@@ -128,7 +115,7 @@ object Bench {
     /** One timed pass over `names` at `dir`, chunked into fresh sessions. */
     def runPass(names: Seq[String], dir: String): Map[String, Double] =
       names.grouped(chunkSize).flatMap { chunk =>
-        val spark = newSession()
+        val spark = GraftSession.start()
         warm(spark, dir)
         val res = chunk.map(n => n -> exec(spark, n, dir))
         spark.stop()
@@ -168,7 +155,7 @@ object Bench {
       if (streamOnly) -1.0
       else {
         import org.apache.spark.sql.functions._
-        val s = newSession()
+        val s = GraftSession.start()
         try {
           val times = (0 to 3).map { _ =>
             val t0 = System.nanoTime()
@@ -280,7 +267,7 @@ object Bench {
       if (subset.isDefined) (-1.0, Seq.empty)
       else {
         val runs = (1 to n).map { i =>
-          val ss = newSession()
+          val ss = GraftSession.start()
           try {
             replayThroughput(ss, fixtureLines, s"${tag}warm$i")
             replayThroughput(ss, lines, tag + i)

@@ -6,9 +6,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
-/** Engine extensions, installed with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` on every
-  * session this engine creates (Verify, Bench, tests, tools) — the
+/** Engine extensions. [[GraftSession]] installs them through
+  * `spark.sql.extensions` on every session this engine creates — the
   * documented public path for registering native Catalyst expressions
   * (SURVEY.md §4 extension ladder, tier (b)/(c)). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

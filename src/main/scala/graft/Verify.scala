@@ -60,15 +60,7 @@ object Verify {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     def keep(n: String) = only.forall(_.contains(n))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     val failed = runAll(spark, sfDir, outDir,
       SparkEntry.queries.toSeq.filter(t => keep(t._1)),
       SparkEntry.oracleSql.filter(t => keep(t._1)))

@@ -10,10 +10,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * the span-relation kernel (text/Spans, q104's substring dedup).
   * Element k (0-based) fingerprints tokens [k, k+w): each token hashes
   * once via XXH64 over its UTF-8 bytes (seed 42), and the window chains
-  * the w token hashes through XXH64.hashLong — the same accumulation
-  * `xxhash64(t_1, …, t_w)` performs, so two windows collide only in the
-  * 2⁻⁶⁴ class the Spans scaladoc already documents for its hash-equality
-  * trade. Replaces the interpreted
+  * the w token hashes through XXH64.hashLong. That is structurally
+  * analogous to `xxhash64(t_1, …, t_w)` but its values differ: Spark
+  * seeds each argument's hash with the running hash, while here every
+  * token hashes at seed 42 and only the results chain. Two windows
+  * collide only in the 2⁻⁶⁴ class the Spans scaladoc documents for its
+  * hash-equality trade. Replaces the interpreted
   * `transform(sequence(0, n−w), i -> xxhash64(concat_ws(" ",
   * slice(toks, i+1, w))))` pipeline, which materialized a w-token STRING
   * per window (O(n·w) bytes per document, interpreted lambda dispatch

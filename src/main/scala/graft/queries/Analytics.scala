@@ -843,7 +843,7 @@ object Analytics {
     //      Exact counts are the payload (q11b verdict pattern; the
     //      register blob is DataSketches-specific, not cross-engine);
     //      the verdict pins |est − exact| ≤ 0.10·exact (RSE ≈ 1.6% at
-    //      lgK = 12; measured via tools/HllErr: worst 2.91% at sf0.1,
+    //      lgK = 12; measured (SCALE.md, "HLL verdict"): worst 2.91% at sf0.1,
     //      2.99% at 10×, 2.86% at 100×, and EXACT at sf ≤ 0.01 where
     //      groups stay in sparse mode — > 3× headroom at every scale;
     //      deterministic: registers are per-bucket maxima of a fixed

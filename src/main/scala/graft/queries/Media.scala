@@ -179,7 +179,8 @@ object Media {
     //      candidates only. Payload = the exact band answer (same
     //      oracle as q230); the IVF leg contributes a TWO-SIDED
     //      verdict: (a) band recall ≥ 60% of the exact band top-5 rows
-    //      at nprobe = 10 of nlist = 16 — measured (tools/HardNegIvf):
+    //      at nprobe = 10 of nlist = 16 — measured (SCALE.md, "IVF
+    //      hard-negative mining at production nlist"):
     //      recall BEATS the probed-cell fraction at every nprobe
     //      (sf0.001/0.01/0.1: 40/32/48% @ 4 of 16 cells, 76/64/68% @ 8,
     //      84/76/84% @ 10), i.e. band candidates do skew toward the

@@ -1665,7 +1665,8 @@ object Text {
     //      filtered to batch-involving pairs — so what the gate pins is
     //      that the frozen-order index path loses NOTHING vs the
     //      rebuild (recall 1.0 under the order-extension argument at the
-    //      operator; tools/IncrementalDedup prices it at scale). ----
+    //      operator; SCALE.md's exact-dedup "Increment-vs-rebuild"
+    //      entry prices it at scale). ----
     gated("q190_incremental_simjoin",
       """WITH t AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS w
         |           FROM documents),

@@ -24,13 +24,18 @@ import org.apache.spark.sql.types.StructType
   * landed short-circuits on [[committed]]. The fold being replayed is
   * deterministic from (prior manifest, batch), so a retry that lost the
   * rename race re-creates identical content. Version pruning keeps every
-  * version referenced by the newest `keepManifests` manifests — a pointer
+  * version referenced by the newest [[KeepManifests]] manifests — a pointer
   * can reach arbitrarily far back (a never-touched bucket), so retention
   * is reference-driven, never age-driven. */
 object BucketedState {
 
   /** Partition column name every bucketed tenant shares. */
   val BucketCol = "bucket"
+
+  /** Retention horizon: every commit keeps the versions its newest
+    * `KeepManifests` manifests reference, so a reader that resolved one
+    * of them keeps its files. */
+  private val KeepManifests = 4
 
   /** Deterministic bucket of a state key — MUST be the same expression at
     * write (layout) and update (dirty-set) time. */
@@ -122,8 +127,7 @@ object BucketedState {
     * [[BucketCol]]) as version `batchId`, with pointers for every other
     * bucket inherited from `priorManifest`. */
   def commit(dirtyState: DataFrame, dir: String, batchId: Long, p: Int,
-             dirtyBuckets: Set[Int], priorManifest: Map[Int, Long],
-             keepManifests: Int = 4): Unit = {
+             dirtyBuckets: Set[Int], priorManifest: Map[Int, Long]): Unit = {
     val spark = dirtyState.sparkSession
     val fs = fsOf(spark, dir)
     val target = new Path(s"$dir/v=$batchId")
@@ -140,7 +144,7 @@ object BucketedState {
     else require(fs.rename(staging, target),
       s"rename $staging -> $target failed")
     // prune: drop crashed stagings, then every version not referenced by
-    // the newest keepManifests manifests (pointer-driven retention)
+    // the newest KeepManifests manifests (pointer-driven retention)
     fs.listStatus(new Path(dir)).toSeq.map(_.getPath)
       .filter(q => q.getName.startsWith(".staging-") &&
         q.getName.stripPrefix(".staging-").toLongOption.exists(_ < batchId))
@@ -148,7 +152,7 @@ object BucketedState {
     val versions = fs.listStatus(new Path(dir)).toSeq.map(_.getPath.getName)
       .filter(_.startsWith("v=")).flatMap(_.stripPrefix("v=").toLongOption)
       .sorted.reverse
-    val live = versions.take(keepManifests).flatMap { v =>
+    val live = versions.take(KeepManifests).flatMap { v =>
       if (!fs.exists(manifestPath(v, dir))) Seq(v)
       else v +: parseManifest(fs, dir, v)._2.values.toSeq
     }.toSet
@@ -162,85 +166,26 @@ object BucketedState {
       (batchId, fieldPaths(dirtyState.schema) - BucketCol)): Unit
   }
 
-  /** Fold the current state into ONE fresh full version at `batchId`
-    * (every bucket rewritten, manifest pointing only at `batchId`) and
-    * prune everything older — the compaction that bounds how far back a
-    * never-touched bucket's pointer can reach (file-listing cost and
-    * retention both become O(1) versions again). Same staging+rename
-    * commit, so a crashed compaction is invisible and a retry is a
-    * no-op.
-    *
-    * ID-COORDINATION CONTRACT: version ids double as the commit fence
-    * AND the resolution order (latestManifest picks the LARGEST id), so
-    * compact is safe only for shelves whose batch ids the CALLER
-    * assigns (offline/maintenance ingest, the JoinViewSpec pattern of
-    * jumping to a reserved high id and resuming the normal sequence
-    * above it). For tenants driven by engine-assigned foreachBatch ids
-    * it must NOT run out-of-band: an id above the stream's future
-    * sequence shadows every later fold (resolution keeps picking the
-    * compacted snapshot), and an id the engine will reuse makes the
-    * retry fence silently swallow that batch. For those tenants,
-    * compact INSIDE foreachBatch at the engine's own id for that batch
-    * ([[foldCompact]]: fold the batch, then publish the full state as
-    * one rewrite) — the id sequence then stays the engine's and both
-    * hazards vanish. */
-  def compact(spark: SparkSession, dir: String, schema: StructType,
-              batchId: Long): Unit = {
-    if (committed(spark, dir, batchId)) return
-    val (v, p, manifest) = latestManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no state to compact under $dir"))
-    // compact is a state-REWRITING entry point: an explicit-schema read
-    // of a schema-drifted dir would materialize the missing columns as
-    // NULL and republish that as the full snapshot — and keepManifests=1
-    // prunes the pre-drift versions in the same call, making the
-    // corruption unrecoverable. Same guard as every fold/read path.
-    verifySchema(spark, dir, v, manifest, schema, "compact")
-    // Guard against ALL v= directory names, not just live manifest
-    // values: a stray directory above batchId (crashed foreign writer,
-    // or a caller-chosen compaction id colliding with an id the engine
-    // will assign later) would make committed() silently swallow that
-    // future batch — the exact hazard the ID-COORDINATION contract
-    // describes. Enforce it here, where the id is chosen.
-    val allVersions = fsOf(spark, dir).listStatus(new Path(dir)).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("v="))
-      .flatMap(_.stripPrefix("v=").toLongOption)
-    require(allVersions.forall(_ < batchId),
-      s"compact batchId=$batchId must exceed every v= directory under " +
-        s"$dir (found ${allVersions.sorted.mkString(",")}) — a reused or " +
-        "shadowed id breaks the retry fence / resolution order")
-    commit(read(spark, dir, schema, manifest, None), dir, batchId, p,
-      manifest.keySet, manifest, keepManifests = 1)
-  }
-
-  /** The IN-STREAM compact form the ID-COORDINATION contract names for
-    * engine-driven tenants: called from foreachBatch AT THE ENGINE'S OWN
-    * id for this batch, it folds the batch into the FULL state and
+  /** The one compaction path: called from foreachBatch AT THE ENGINE'S
+    * OWN id for this batch, it folds the batch into the FULL state and
     * republishes EVERY bucket as one fresh version whose manifest points
-    * only at `batchId`. The id sequence stays the engine's, so neither
-    * [[compact]] hazard can occur: no future batch is shadowed (this id
-    * precedes all later engine ids by construction) and the retry fence
-    * keeps its meaning (a retried batch finds its own id committed —
-    * WITH its fold applied, since fold and rewrite land in the same
-    * atomic rename).
+    * only at `batchId` — no pointer reaches behind the compaction point,
+    * which bounds file listing and retention to O(1) versions.
+    * Fold and rewrite land in the same staging+rename commit, so a
+    * crashed compaction is invisible and a retried batch finds its own id
+    * committed WITH its fold applied. The id sequence stays the
+    * engine's: no later batch is shadowed, and the retry fence keeps its
+    * meaning.
     *
-    * Retention stays the DEFAULT 4-manifest horizon, not compact()'s 1:
-    * the stream has live concurrent readers, and a reader that resolved
-    * ANY of the last few manifests must keep its pinned versions until
-    * the normal horizon passes — a narrower keep would yank files whose
-    * only reference is an older manifest (the out-of-band [[compact]]
-    * keeps 1 because ITS contract is caller-assigned ids, i.e. the
-    * caller also controls reader quiescence). The pre-compaction
-    * versions then age out through the following commits'
-    * reference-driven pruning.
-    * Cost is one full-state read + write, which is what compaction is;
-    * run it on a cadence (every N-th trigger / when the manifest's
-    * version spread exceeds a bound), with plain folds between.
+    * Retention is the ordinary [[KeepManifests]] horizon: a live reader
+    * that resolved any of the last few manifests keeps its pinned
+    * versions, and the pre-compaction versions age out through the
+    * following commits' reference-driven pruning. Cost is one full-state
+    * read + write; run it on a cadence, with plain folds between.
     *
     * Every bucket is rewritten, so the commit lays the state out at
     * `targetP` (the [[requireGrow]] rule: never below the on-disk p) and
-    * folds above this id resolve that fan-out from the manifest. A
-    * retried grow finds its own committed version under the ordinary
-    * retry fence. */
+    * folds above this id resolve that fan-out from the manifest. */
   def foldCompact(spark: SparkSession, dir: String, batchId: Long,
                   targetP: Int, schema: StructType, keyCol: String,
                   what: String)(fold: DataFrame => DataFrame): Unit =
@@ -250,10 +195,8 @@ object BucketedState {
         .drop(BucketCol))
         .withColumn(BucketCol, bucketOf(col(keyCol), targetP))
       // prior manifest deliberately dropped from the POINTERS: every
-      // bucket (rows or not) re-homes at batchId, so no pointer can
-      // reach behind the compaction point — while the DEFAULT
-      // keepManifests retains the last 4 manifests' files, the same
-      // reader horizon every normal commit honors
+      // bucket (rows or not) re-homes at batchId, while retention keeps
+      // the same reader horizon every normal commit honors
       commit(merged, dir, batchId, targetP, (0 until targetP).toSet,
         Map.empty)
     }

@@ -64,12 +64,10 @@ object StatsMaintenance {
 
   /** [[update]]'s COMPACTING form — same fold, published through
     * [[BucketedState.foldCompact]]: the batch folds into the full state
-    * and every bucket re-homes at this batch's id, pruning all older
-    * versions. Call INSTEAD of update on a compaction trigger (every
-    * N-th engine batch / when the manifest's version spread exceeds a
-    * bound), at the ENGINE'S OWN batchId — that keeps the id sequence
-    * the engine's, which is what makes in-stream compaction safe for
-    * foreachBatch-driven tenants (BucketedState ID-COORDINATION). */
+    * and every bucket re-homes at this batch's id. Call INSTEAD of update
+    * on a compaction trigger (every N-th engine batch / when the
+    * manifest's version spread exceeds a bound), at the ENGINE'S OWN
+    * batchId, so the id sequence stays the engine's. */
   def compactUpdate(dir: String, values: DataFrame, batchId: Long): Unit =
     BucketedState.foldCompact(values.sparkSession, dir, batchId,
       NumBuckets, stateSchema, "v", "stats") { prev =>

@@ -207,7 +207,8 @@ object CopyIndex {
     * BucketedState manifest-read discipline), not a root read with a
     * partition filter, because the root read LISTS every bucket
     * directory before pruning and at P = 1024 that listing costs more
-    * than the pruned data read (measured: tools/CopyIndexScale). The
+    * than the pruned data read (measured: SCALE.md, "Winnowing copy
+    * detection"). The
     * `bucket IN (...)` partition filter stays on top as belt and
     * braces (and it is what the plan pin asserts). A wanted bucket
     * with no directory simply contributes nothing — an fp no corpus

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Token-window span relation for exact SUBSTRING dedup (q104's operator):
   * one row per `window`-token sliding window of each document,
-  * `(doc_id, start, h)` with `h = xxhash64(window text)`. The hash keys
+  * `(doc_id, start, h)` with `h` the [[graft.functions.expressions.WindowFps]]
+  * fingerprint of the window's tokens. The hash keys
   * shuffle uniformly at 8 bytes per key regardless of window text (r18:
   * was a 32-char md5 hex string — guide §2.3, narrower shuffle keys; a
   * 64-bit fingerprint standing in for window equality is the same trade

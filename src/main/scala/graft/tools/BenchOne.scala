@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
 /** Focused micro-bench for one registered query: warmup at sf0.001, then
   * N timed runs at the target SF (noop sink, same discipline as Bench).
@@ -11,15 +10,7 @@ object BenchOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val iters = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     val q = SparkEntry.queries(name)
     q(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
     val times = (1 to iters).map { _ =>

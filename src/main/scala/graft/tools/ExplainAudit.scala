@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
 /** Prints formatted physical plans for the scale-critical queries so plan
   * regressions (lost pushdown, surprise nested-loop joins, missing partial
@@ -50,12 +49,7 @@ object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq else defaults
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.start()
     names.foreach { n =>
       println(s"\n======== $n ========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -1,7 +1,7 @@
 package graft.tools
 
-import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{GraftSession, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only scale-smoke data generator: replicate a driver-provided SF
@@ -20,14 +20,7 @@ object GenScaledData {
     val src = args(0)
     val dest = args(1)
     val copies = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     val OFF = 1000000000000L
 
     def replicate(df: DataFrame, shifted: Seq[String]): DataFrame =

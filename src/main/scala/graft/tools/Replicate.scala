@@ -3,17 +3,13 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The ONE copy of the in-memory corpus-replication stripe the
-  * century-scale pricing tools share (CopyStreamScale, ForgetScale,
-  * HardNegIvf's scaled mode): `copies` disjoint id stripes at 10^13
-  * offsets — one decade ABOVE GenScaledData's 10^12 FK-preserving
-  * stripe and clear of Media.PlantedIdOffset's 10^12 plant reserve, so
-  * replica ids can never collide with generated keys or planted rows.
-  * GenScaledData remains the on-disk multi-table generator
-  * (FK-consistent shifts across parents); this is the single-table
-  * in-memory form the tools need. */
-// private[graft], not [tools]: MiningScaleSpec pins the production-
-// nlist operating point with the same stripe the tools measured it on
+/** In-memory corpus replication for MiningScaleSpec's production-nlist
+  * corpus: `copies` disjoint id stripes at 10^13 offsets — one decade
+  * ABOVE GenScaledData's 10^12 FK-preserving stripe and clear of
+  * Media.PlantedIdOffset's 10^12 plant reserve, so replica ids can never
+  * collide with generated keys or planted rows. GenScaledData remains
+  * the on-disk multi-table generator (FK-consistent shifts across
+  * parents); this is the single-table in-memory form. */
 private[graft] object Replicate {
 
   /** 10^13 — see object scaladoc for why not GenScaledData's 10^12. */

@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.concurrent.TrieMap
 
 /** Per-stage wall/cpu breakdown for one registered query — the local
@@ -18,7 +17,6 @@ object StageProfile {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val iters = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // dev-only A/B knob: SPARK_GRAFT_EXTRA_CONFS="k=v;k2=v2" overlays
     // session confs so a partitioning/join hypothesis can be tested
     // without a code edit
@@ -26,15 +24,8 @@ object StageProfile {
       .split(";").filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2); (k, v)
       }
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = extra.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(
+      extra.foldLeft(GraftSession.builder()) { case (b, (k, v)) => b.config(k, v) })
 
     final case class St(name: String, submitted: Long, var completed: Long,
                         var tasks: Int, var taskMs: Long, var shuffleReadB: Long,

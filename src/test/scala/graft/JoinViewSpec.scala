@@ -119,31 +119,18 @@ class JoinViewSpec extends SparkTestBase {
     assert(BucketedState.bucketDirs(spark, dir, 2L) === seedBuckets)
     assert(viewSet(dir) === oneShot(dir))
 
-    // compaction folds every live pointer into ONE full version, prunes
-    // the rest, and changes nothing observable
+    // a compacting fold with empty sides at the next batch id folds
+    // every live pointer into ONE full version and changes nothing
+    // observable
     val before = viewSet(dir)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("rel",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("k1",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("k2",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("pay1",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("pay2",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField(BucketedState.BucketCol,
-        org.apache.spark.sql.types.IntegerType)))
-    BucketedState.compact(spark, dir, schema, 100L)
+    JoinViewMaintenance.compactUpdate(dir, emptyL, emptyR, 3L)
     val Some((cv, _, cm)) = BucketedState.latestManifest(spark, dir)
-    assert(cv === 100L && cm.values.toSet === Set(100L))
-    assert(BucketedState.bucketDirs(spark, dir, 100L) === seedBuckets)
+    assert(cv === 3L && cm.values.toSet === Set(3L))
+    assert(BucketedState.bucketDirs(spark, dir, 3L) === seedBuckets)
     assert(viewSet(dir) === before)
-    assert(!new java.io.File(s"$dir/v=0").exists(), "old version not pruned")
     // the stream keeps folding on top of the compacted state
     JoinViewMaintenance.update(dir, L(("o5", "c1", "e", "upsert")),
-      emptyR, 101L)
+      emptyR, 4L)
     assert(viewSet(dir) === oneShot(dir))
   }
 

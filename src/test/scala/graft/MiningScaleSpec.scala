@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
 /** CI pin for the PRODUCTION-NLIST hard-negative mining operating point
   * (SCALE.md's measured curve, round 15: band recall ≥ 60% holds while
   * probing ≤ 25% of the cells once nlist reaches production granularity
-  * — 80% at nlist=64/25%, 90% at nlist=256/25%). The 45-minute
-  * tools/HardNegIvf scaled run established the claim; this spec keeps a
+  * — 80% at nlist=64/25%, 90% at nlist=256/25%). A 45-minute scaled
+  * run established the claim (SCALE.md, "IVF hard-negative mining at
+  * production nlist"); this spec keeps a
   * REGRESSION GUARD on it at suite cadence with a corpus just big
   * enough for nlist = 64: a drift in probeCells/assignCells math (tie
   * order, argmax, sampling fallback) that degraded pruned recall would

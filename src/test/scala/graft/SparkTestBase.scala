@@ -4,15 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (getOrCreate → one JVM-wide session;
-  * config mirrors the driver's Verify environment). */
+  * built by [[GraftSession]], the contract Verify runs under, at a fixed
+  * 4 cores). */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
+  lazy val spark: SparkSession = GraftSession.builder(cpus = 4)
     .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   /** Smallest driver-provided scale factor — fast enough for unit suites. */

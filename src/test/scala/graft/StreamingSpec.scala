@@ -1481,8 +1481,8 @@ class StreamingSpec extends SparkTestBase {
     val shelf = tmpDir("statscompact_state") + "/stats"
     def vals(df: DataFrame) = df.select(col("value").cast("long").as("v"))
     // ENGINE-assigned ids drive both forms: trigger 2 compacts in-stream
-    // (fold the batch, republish every bucket at the engine's id — the
-    // ID-COORDINATION safe form), all other triggers fold pruned. The
+    // (fold the batch, republish every bucket at the engine's id), all
+    // other triggers fold pruned. The
     // compaction id is the engine's own, so no future batch can be
     // shadowed and the retry fence keeps its meaning.
     val q = spark.readStream.option("maxFilesPerTrigger", "1").text(src)
@@ -1733,7 +1733,7 @@ class StreamingSpec extends SparkTestBase {
     }
   }
 
-  test("state-rewrite guards: compact refuses a schema-drifted dir; an out-of-band reseed at the same path re-verifies despite the process cache") {
+  test("state-rewrite guards: a compacting fold refuses a schema-drifted dir; an out-of-band reseed at the same path re-verifies despite the process cache") {
     import graft.streaming.BucketedState
     import spark.implicits._
     // a dir whose on-disk column is `s` (the drift: tenant expects `v`)
@@ -1742,15 +1742,16 @@ class StreamingSpec extends SparkTestBase {
         BucketedState.bucketOf(col("s"), 8))
     val shelf = tmpDir("compact_drift") + "/vcnt"
     BucketedState.commit(drifted, shelf, 0L, 8, (0 until 8).toSet, Map.empty)
-    // compact is a state-REWRITING entry point with keepManifests=1: an
-    // unguarded explicit-schema read would null the missing column and
-    // prune the pre-drift versions in the same call
+    // a compacting fold rewrites every bucket: an unguarded
+    // explicit-schema read would null the missing column and republish
+    // that as the full state
     val err = intercept[IllegalStateException] {
-      BucketedState.compact(spark, shelf, vcntSchema, 1L)
+      BucketedState.foldCompact(spark, shelf, 1L, 8, vcntSchema, "v",
+        "vcnt")(identity)
     }
     assert(err.getMessage.contains("v") &&
       err.getMessage.contains("Reseed or migrate"),
-      s"compact must hit the drift guard, got: ${err.getMessage}")
+      s"a compacting fold must hit the drift guard, got: ${err.getMessage}")
 
     // version-keyed verification cache: a dir that PASSED verification
     // gets reseeded out-of-band (fs-level, no in-process commit) with a

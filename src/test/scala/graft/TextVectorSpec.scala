@@ -174,17 +174,32 @@ class TextVectorSpec extends SparkTestBase {
       .filter(size(col("w")) >= w)
       .select(col("doc_id"), col("w"))
       .localCheckpoint()
-    val newRel = graft.text.Spans.spanRelation(toks, "doc_id", "w", w)
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n"), countDistinct(col("h")).as("ndv"))
-    val oldRel = toks
+    val newSpans = graft.text.Spans.spanRelation(toks, "doc_id", "w", w)
+    val oldSpans = toks
       .select(col("doc_id"),
         posexplode(transform(sequence(lit(0), size(col("w")) - w),
           i => xxhash64(concat_ws(" ", slice(col("w"), i + 1, lit(w)))))))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n"), countDistinct(col("col")).as("ndv"))
+      .select(col("doc_id"), col("pos").as("start"), col("col").as("h"))
+    def perDoc(spans: org.apache.spark.sql.DataFrame) = spans.groupBy("doc_id")
+      .agg(count(lit(1)).as("n"), countDistinct(col("h")).as("ndv"))
+    val newRel = perDoc(newSpans)
+    val oldRel = perDoc(oldSpans)
     assert(newRel.exceptAll(oldRel).isEmpty && oldRel.exceptAll(newRel).isEmpty,
       "window fingerprint equality structure drifted from the string form")
+    // across documents too: per-doc counts cannot see a window that
+    // fingerprints differently in two documents, so the fingerprints of
+    // the same (doc_id, start) must be a bijection between the domains
+    val pairs = newSpans.withColumnRenamed("h", "h_new")
+      .join(oldSpans.withColumnRenamed("h", "h_old"), Seq("doc_id", "start"))
+      .select("h_new", "h_old").distinct().localCheckpoint()
+    assert(pairs.count() > 0, "no span pairs joined — vacuous")
+    def maxFanOut(from: String, to: String): Long =
+      pairs.groupBy(from).agg(count(col(to)).as("k"))
+        .agg(max(col("k"))).head().getLong(0)
+    assert(maxFanOut("h_new", "h_old") === 1L,
+      "one new fingerprint maps to several window strings")
+    assert(maxFanOut("h_old", "h_new") === 1L,
+      "one window string maps to several new fingerprints")
   }
 
   test("SimHash puts planted near-duplicates at small Hamming distance") {
