@@ -515,25 +515,79 @@ object BucketedState {
   }
 
   /** Newest committed full state of a tenant: every bucket at the
-    * on-disk p, behind the schema guard ([[readPruned]] with all
-    * buckets). */
+    * on-disk p, behind the schema guard. */
   def readState(spark: SparkSession, dir: String, schema: StructType,
                 what: String): DataFrame =
-    readPruned(spark, dir, schema, what)(p => (0 until p).toSet)
+    read(spark, dir, schema, resolve(spark, dir, schema, what)._2, None)
 
-  /** Manifest-resolved, schema-GUARDED read of selected buckets — the
-    * point-lookup read path. `want` receives the RESOLVED fan-out and
-    * names the buckets to read, so a reader that derives its bucket
-    * from p (a key lookup) reads the layout that exists, across
-    * re-buckets and before a raised constant's grow lands. The schema
-    * guard applies: a wrong/foreign dir fails loudly, never "key
-    * absent". */
-  def readPruned(spark: SparkSession, dir: String, schema: StructType,
-                 what: String)(want: Int => Set[Int]): DataFrame = {
+  /** The readers' one resolve: the newest manifest as (on-disk p,
+    * bucket → owning version), behind the schema guard — a wrong,
+    * foreign or empty dir fails loudly, never reads as "no rows". A
+    * reader that derives buckets from keys uses THIS p, so it reads the
+    * layout that exists, across grows. */
+  private[streaming] def resolve(spark: SparkSession, dir: String,
+      schema: StructType, what: String): (Int, Map[Int, Long]) = {
     val (v, p, manifest) = latestManifest(spark, dir).getOrElse(
       throw new IllegalStateException(s"no $what state under $dir"))
     verifySchema(spark, dir, v, manifest, schema, what)
-    read(spark, dir, schema, manifest, Some(want(p)))
+    (p, manifest)
+  }
+
+  /** Spec hook: the data files the latest [[readLocal]] opened. */
+  private[graft] val lastFilesOpened =
+    new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
+
+  /** Driver-side read of `buckets` under a resolved `manifest`: opens
+    * only the files under `v=<owner>/bucket=<b>/` with Spark's own
+    * parquet reader, in this thread — no Spark job — and keeps what
+    * `pick` returns for each row (`schema` minus [[BucketCol]], in
+    * order). A row is valid only during its `pick` call: the reader
+    * reuses it. A referenced version dir that is missing throws (state
+    * deleted out of band or over-pruned must not read as "absent"); a
+    * missing bucket dir inside it is a bucket without rows, which the
+    * partitioned write leaves dirless. */
+  private[streaming] def readLocal[T](spark: SparkSession, dir: String,
+      schema: StructType, manifest: Map[Int, Long], buckets: Set[Int])
+      (pick: org.apache.spark.sql.catalyst.InternalRow => Option[T]): Seq[T] = {
+    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val fs = fsOf(spark, dir)
+    val files = manifest.filter(e => buckets(e._1)).groupBy(_._2).toSeq
+      .flatMap { case (v, owned) =>
+        val vDir = new Path(s"$dir/v=$v")
+        if (!fs.exists(vDir)) throw new IllegalStateException(
+          s"state at $dir references v=$v but the directory is missing — " +
+            "state was deleted out-of-band or over-pruned")
+        owned.keys.toSeq.map(b => new Path(vDir, s"$BucketCol=$b"))
+          .filter(fs.exists)
+          .flatMap(fs.listStatus(_).toSeq)
+          .filter { f =>
+            val n = f.getPath.getName
+            f.isFile && !n.startsWith("_") && !n.startsWith(".")
+          }
+      }
+    lastFilesOpened.set(files.map(_.getPath.toString))
+    if (files.isEmpty) Nil
+    else {
+      val dataSchema = StructType(schema.filterNot(_.name == BucketCol))
+      val reader = new ParquetFileFormat().buildReaderWithPartitionValues(
+        spark, dataSchema, new StructType(), dataSchema, Nil,
+        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        new org.apache.hadoop.conf.Configuration(
+          spark.sparkContext.hadoopConfiguration))
+      files.flatMap { f =>
+        val rows = reader(PartitionedFile(
+          org.apache.spark.sql.catalyst.InternalRow.empty,
+          org.apache.spark.paths.SparkPath.fromPath(f.getPath), 0L,
+          f.getLen, Array.empty, f.getModificationTime, f.getLen, Map.empty))
+        // no task context closes the reader here: close it ourselves
+        try rows.flatMap(pick).toList
+        finally rows match {
+          case c: AutoCloseable => c.close()
+          case _ =>
+        }
+      }
+    }
   }
 
   /** Buckets materialized under one version directory — the spec hook for

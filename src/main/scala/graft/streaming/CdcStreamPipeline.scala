@@ -1,10 +1,11 @@
 package graft.streaming
 
 import graft.cdc.{Bootstrap, Envelope}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
+  StructField, StructType}
 
 /** The reference pipeline's streaming spine re-expressed as one Structured
   * Streaming query (SURVEY.md §3.1-3.2, S7-S12):
@@ -432,66 +433,76 @@ object CdcStreamPipeline {
 
   /** POINT LOOKUP against the serving state — single-key form of
     * [[servingLookupBatch]]; returns the live row (0 or 1 rows,
-    * `data.*`); a tombstoned key reads as absent. */
+    * `data.*`) as a local relation; a tombstoned key reads as absent. */
   def servingLookup(spark: SparkSession, servingDir: String,
       schemaName: String, tableName: String, pk: Long): DataFrame =
     servingLookupBatch(spark, servingDir, Seq((schemaName, tableName, pk)))
       .drop("sch", "tbl", "pk")
 
-  /** BATCHED, MULTI-TABLE point lookup — the read-side payoff of the
-    * bucketed layout (reference §3.3: the serving store answers
-    * interactive key queries): for a set of (schema, table, pk) keys,
-    * resolve the manifest ONCE, hash every key to its bucket under the
-    * RESOLVED fan-out, and read only the UNION of those buckets — a
-    * 100-key lookup pays one manifest resolution and
-    * O(|touched buckets| · state/p) I/O, never 100 resolutions or
-    * O(state) (round-12 verdict item 3). Returns one
-    * `(sch, tbl, pk, data.*)` row per LIVE key; tombstoned and absent
-    * keys are simply absent; a wrong or schema-drifted dir fails loudly
-    * through the shared guard, never as "key absent".
+  /** BATCHED, MULTI-TABLE point lookup, answered on the driver with no
+    * Spark job (reference §3.3: the serving store answers interactive
+    * key queries). For a set of (schema, table, pk) keys it resolves the
+    * manifest ONCE behind the schema guard, hashes every key to its
+    * bucket under the RESOLVED fan-out, and opens only those buckets'
+    * files in the versions that own them
+    * ([[BucketedState.readLocal]]) — one resolution and
+    * O(|touched buckets| · state/p) I/O per call. Returns one
+    * `(sch, tbl, pk, data.*)` row per LIVE key as a local relation, so
+    * collecting it runs no job; tombstoned and absent keys are simply
+    * absent; a wrong, schema-drifted or over-pruned dir fails loudly,
+    * never as "key absent".
     *
-    * Key derivation executes the WRITE PATH's own expressions
-    * ([[servingKeyExpr]] / [[BucketedState.bucketOf]]) on literals
-    * driver-side — no Spark job, and no re-implemented hash to drift
-    * (round-12 ADVICE item 3). Buckets derive from the on-disk p, so
-    * lookups answer before and after a grow alike.
-    * The fingerprint prefilter prunes; the exact composite join
-    * decides — a 64-bit collision can only co-locate keys, never
-    * confuse them. */
+    * Buckets come from the WRITE PATH's own expressions
+    * ([[servingKeyExpr]] / [[BucketedState.bucketOf]]) in one
+    * projection over the parameter-sized key relation, which the
+    * optimizer folds into a local relation — no job, and no
+    * re-implemented hash to drift. They derive from the on-disk p, so
+    * lookups answer before and after a grow alike. A row answers a key
+    * only on an exact (schema, table, pk) match with a non-null pk: a
+    * fingerprint collision can only co-bucket keys, never confuse
+    * them. */
   def servingLookupBatch(spark: SparkSession, servingDir: String,
       keys: Seq[(String, String, Long)]): DataFrame = {
     require(keys.nonEmpty, "servingLookupBatch needs at least one key")
-    // key fingerprints and buckets come from the write path's OWN
-    // column expressions resolved over a PARAMETER-SIZED local relation
-    // (ConvertToLocalRelation folds the projection in the optimizer —
-    // driver-side eval, no job, and no re-implemented hash to drift)
-    val ks = spark.createDataFrame(keys.distinct)
-      .toDF("q_sch", "q_tbl", "q_pk")
-      .withColumn("q_k",
-        servingKeyExpr(col("q_sch"), col("q_tbl"), col("q_pk")))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
-      .toSeq
-    val kSet = ks.map(_._4).distinct
-    val pruned = BucketedState.readPruned(spark, servingDir, servingSchema,
-      "serving view")(p =>
-        spark.createDataFrame(kSet.map(Tuple1(_))).toDF("k")
-          .select(BucketedState.bucketOf(col("k"), p).as("b"))
-          .collect().map(_.getInt(0)).toSet)
-    // parameter-sized key relation, broadcast by construction; the join
-    // applies the exact composite predicate on the k-prefiltered rows
-    val keyRel = broadcast(spark.createDataFrame(ks)
-      .toDF("q_sch", "q_tbl", "q_pk", "q_k"))
-    pruned.filter(col("k").isin(kSet: _*))
-      .join(keyRel, col("k") === col("q_k") &&
-        col("metadata.`schema-name`") === col("q_sch") &&
-        col("metadata.`table-name`") === col("q_tbl") &&
-        col(s"data.`$ServingPkCol`") === col("q_pk"))
-      .filter(col("metadata.operation") =!= "delete")
-      .select(Seq(col("q_sch").as("sch"), col("q_tbl").as("tbl"),
-        col("q_pk").as("pk")) ++
-        servingSchema("data").dataType.asInstanceOf[StructType]
-          .fieldNames.map(f => col(s"data.`$f`")): _*)
+    val (p, manifest) = BucketedState.resolve(spark, servingDir,
+      servingSchema, "serving view")
+    val buckets = spark.createDataFrame(keys.distinct)
+      .select(BucketedState.bucketOf(
+        servingKeyExpr(col("_1"), col("_2"), col("_3")), p))
+      .collect().map(_.getInt(0)).toSet
+    val wanted = keys.toSet
+    val pks = keys.map(_._3).toSet
+    val dataType = servingSchema("data").dataType.asInstanceOf[StructType]
+    val metaType = servingSchema("metadata").dataType.asInstanceOf[StructType]
+    val Seq(dataAt, metaStructAt) =
+      Seq("data", "metadata").map(servingSchema.fieldIndex)
+    val pkAt = dataType.fieldIndex(ServingPkCol)
+    val metaAt = Seq("schema-name", "table-name", "operation")
+      .map(metaType.fieldIndex)
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(dataType)
+    // a null pk, schema, table or operation never answers (getLong
+    // would read a null pk as 0)
+    val rows = BucketedState.readLocal(spark, servingDir, servingSchema,
+        manifest, buckets) { r =>
+      val data =
+        if (r.isNullAt(dataAt)) null else r.getStruct(dataAt, dataType.size)
+      val meta = if (r.isNullAt(metaStructAt)) null
+        else r.getStruct(metaStructAt, metaType.size)
+      if (data == null || meta == null || data.isNullAt(pkAt) ||
+          !pks(data.getLong(pkAt)) || metaAt.exists(meta.isNullAt)) None
+      else {
+        val Seq(sch, tbl, op) = metaAt.map(meta.getUTF8String(_).toString)
+        val pk = data.getLong(pkAt)
+        if (op == "delete" || !wanted((sch, tbl, pk))) None
+        else Some(Row.fromSeq(
+          Seq(sch, tbl, pk) ++ toRow(data).asInstanceOf[Row].toSeq))
+      }
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField("sch", StringType),
+        StructField("tbl", StringType),
+        StructField("pk", LongType, nullable = false)) ++ dataType.fields))
   }
 
   /** The user-facing serving view: live rows only (tombstones hidden).

@@ -16,6 +16,27 @@ class StreamingSpec extends SparkTestBase {
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
+  /** Data files under the keys' `bucket=<b>/` dirs in the versions the
+    * newest manifest names as their owners — the files a point lookup of
+    * `keys` must open, and the only ones. */
+  private def keyBucketFiles(servingDir: String,
+      keys: Seq[(String, String, Long)]): Set[String] = {
+    import graft.streaming.BucketedState
+    import org.apache.hadoop.fs.Path
+    val (_, p, owners) = BucketedState.latestManifest(spark, servingDir).get
+    val fs = new Path(servingDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    keys.map { case (s0, t0, k0) =>
+      spark.range(1).select(BucketedState.bucketOf(
+        xxhash64(lit(s0), lit(t0), lit(k0)), p)).collect().head.getInt(0)
+    }.toSet.flatMap { (b: Int) =>
+      val d = new Path(s"$servingDir/v=${owners(b)}/${BucketedState.BucketCol}=$b")
+      if (!fs.exists(d)) Set.empty[String]
+      else fs.listStatus(d).map(_.getPath).filterNot(q =>
+        q.getName.startsWith("_") || q.getName.startsWith(".")).map(_.toString)
+    }
+  }
+
   private def runPipeline(sourceDir: String, root: String): Sinks = {
     val sinks = Sinks(s"$root/serving", s"$root/archive", s"$root/error",
       s"$root/checkpoint")
@@ -148,22 +169,22 @@ class StreamingSpec extends SparkTestBase {
     assert(CdcStreamPipeline.servingLookup(spark, sinks.serving,
       "testdb", "retail_trans", 999999999L).isEmpty)
 
-    // I/O: the lookup touches ONLY the key's bucket — the read-side
-    // payoff of the layout (O(state/p) per point query at any size)
+    // I/O: the lookup opens exactly the files of the key's bucket in
+    // its owning version — the read-side payoff of the layout
+    // (O(state/p) per point query at any size) — and answers as a local
+    // relation, so collecting it runs no Spark job
     val pk = snap.keys.head
-    val expectBucket = spark.range(1).select(BucketedState.bucketOf(
-        xxhash64(lit("testdb"), lit("retail_trans"), lit(pk)),
-        CdcStreamPipeline.ServingBuckets))
-      .collect().head.getInt(0)
-    val files = CdcStreamPipeline.servingLookup(spark, sinks.serving,
-        "testdb", "retail_trans", pk)
-      .select(input_file_name()).distinct().collect().map(_.getString(0))
-    // trailing separator: contains("bucket=1") would also match
-    // bucket=10..15 and could green-light an out-of-bucket regression
-    assert(files.nonEmpty &&
-      files.forall(_.contains(s"${BucketedState.BucketCol}=$expectBucket/")),
-      s"lookup read outside its bucket (want bucket=$expectBucket): " +
-        files.mkString(", "))
+    val one = CdcStreamPipeline.servingLookup(spark, sinks.serving,
+      "testdb", "retail_trans", pk)
+    val expected = keyBucketFiles(sinks.serving,
+      Seq(("testdb", "retail_trans", pk)))
+    assert(expected.nonEmpty &&
+      BucketedState.lastFilesOpened.get().toSet === expected,
+      s"lookup opened ${BucketedState.lastFilesOpened.get()}, want $expected")
+    assert(one.queryExecution.executedPlan.isInstanceOf[
+      org.apache.spark.sql.execution.LocalTableScanExec],
+      one.queryExecution.executedPlan.toString)
+    assert(one.collect().toSeq === Seq(snap(pk)))
   }
 
   test("serving rebuild with a bootstrap seed: archive-only rebuild loses seed-only keys (the documented hazard); seedEnv restores full parity") {
@@ -608,23 +629,128 @@ class StreamingSpec extends SparkTestBase {
         s"row mismatch for $key")
     }
 
-    // I/O containment: the read touches ONLY the union of the keys'
-    // buckets (trailing separator — "bucket=1" must not match 10..15)
-    val expectBuckets = keys.map { case (s0, t0, p0) =>
-      spark.range(1).select(BucketedState.bucketOf(
-          xxhash64(lit(s0), lit(t0), lit(p0)),
-          CdcStreamPipeline.ServingBuckets))
-        .collect().head.getInt(0)
-    }.toSet
-    assert(expectBuckets.size < CdcStreamPipeline.ServingBuckets,
+    // I/O: the read opens exactly the files under the union of the
+    // keys' buckets, each in its owning version
+    val opened = BucketedState.lastFilesOpened.get().toSet
+    val expected = keyBucketFiles(sinks.serving, keys)
+    assert(expected.nonEmpty && opened === expected,
+      s"lookup opened $opened, want $expected")
+    assert(expected.map(f => f.substring(0, f.lastIndexOf('/'))).size <
+      CdcStreamPipeline.ServingBuckets,
       "keys cover every bucket — containment check vacuous")
-    val files = looked.select(input_file_name()).distinct()
-      .collect().map(_.getString(0))
-    assert(files.nonEmpty && files.forall(f =>
-      expectBuckets.exists(b =>
-        f.contains(s"${BucketedState.BucketCol}=$b/"))),
-      s"lookup read outside its buckets $expectBuckets: " +
-        files.mkString(", "))
+
+    // parity: one lookup of EVERY key in both logs (tombstoned and
+    // unselected ones included) plus an absent key answers exactly the
+    // serving view
+    val logKeys = Seq(Tables.cdcFixturePath, Tables.cdcShardFixturePath)
+      .map(Envelope.parse(spark, _)
+        .filter(!Envelope.corrupt && col("data.trans_id").isNotNull))
+      .reduce(_ unionByName _)
+      .select(col("metadata.`schema-name`"), col("metadata.`table-name`"),
+        col("data.trans_id")).distinct().collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+    assert(logKeys.exists(k => !snap.contains(k)), "no tombstoned key")
+    val all = CdcStreamPipeline.servingLookupBatch(spark, sinks.serving,
+      logKeys :+ (("testdb", "retail_trans", 999999999L))).collect()
+    assert(all.forall(r => r.getLong(2) === r.getLong(3)))
+    assert(all.map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.take(2) ++ r.toSeq.drop(3)))
+      .toSet === snap.values.toSet)
+    assert(all.length === snap.size)
+  }
+
+  test("driver-side point lookup: untouched buckets answer through the seed's pointer; an over-pruned version throws; a rowless bucket reads empty") {
+    import graft.cdc.Bootstrap
+    import graft.streaming.BucketedState
+    import org.apache.hadoop.fs.Path
+    val loadTs = "2022-03-14T23:00:00.000000Z" // after every fixture record
+    val seed = Materialize.snapshot(
+      Envelope.changelog(spark, Tables.cdcFixturePath))
+    val live = seed.collect()
+      .map(r => r.getLong(r.fieldIndex("trans_id")) -> r).toMap
+    val root = tmpDir("srv_local_lookup")
+    val sinks = Sinks(s"$root/serving", s"$root/archive", s"$root/error",
+      s"$root/checkpoint")
+    CdcStreamPipeline.bootstrap(seed, loadTs, sinks)
+
+    // a 1-key batch at id 0 rewrites that key's bucket only
+    val hot = live.keys.min
+    val line = s"""{"data": {"trans_id": $hot, "customer_id": "c-hot", "event": "purchase", "sku": "AA0000AAAA", "amount": 7, "device": "pc", "trans_datetime": "2022-03-15T00:00:00Z"}, "metadata": {"timestamp": "2022-03-15T00:00:00.000000Z", "record-type": "data", "operation": "update", "partition-key-type": "primary-key", "schema-name": "testdb", "table-name": "retail_trans", "transaction-id": 777}}"""
+    import spark.implicits._
+    CdcStreamPipeline.sinkBatch(sinks)(
+      CdcStreamPipeline.parseLines(Seq(line).toDF("value")), 0L)
+    val (_, _, owners) = BucketedState.latestManifest(spark, sinks.serving).get
+    val hotBucket = owners.collectFirst { case (b, 0L) => b }.get
+    assert(owners.values.count(_ == 0L) === 1)
+
+    val hotRow = CdcStreamPipeline.servingLookup(spark, sinks.serving,
+      "testdb", "retail_trans", hot).collect()
+    assert(hotRow.map(_.getString(1)).toSeq === Seq("c-hot"))
+    assert(BucketedState.lastFilesOpened.get().nonEmpty &&
+      BucketedState.lastFilesOpened.get().forall(
+        _.contains(s"/v=0/${BucketedState.BucketCol}=$hotBucket/")))
+
+    // a key in an untouched bucket: answered from v=-1 through the pointer
+    val cold = live.keys.find(k => keyBucketFiles(sinks.serving,
+      Seq(("testdb", "retail_trans", k))).forall(_.contains("/v=-1/"))).get
+    assert(CdcStreamPipeline.servingLookup(spark, sinks.serving,
+      "testdb", "retail_trans", cold).collect().toSeq === Seq(live(cold)))
+    val coldFiles = BucketedState.lastFilesOpened.get()
+    assert(coldFiles.nonEmpty && coldFiles.forall(_.contains("/v=-1/")))
+
+    // the seed's version deleted out of band: the pointer dangles, and the
+    // lookup throws instead of answering "absent"
+    val fs = new Path(sinks.serving)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new Path(s"${sinks.serving}/v=-1"), true))
+    val dangling = intercept[IllegalStateException] {
+      CdcStreamPipeline.servingLookup(spark, sinks.serving,
+        "testdb", "retail_trans", cold).collect()
+    }
+    assert(dangling.getMessage.contains("v=-1"))
+
+    // a bucket without rows has no directory; its keys read empty
+    val root2 = tmpDir("srv_local_sparse")
+    val sparse = Sinks(s"$root2/serving", s"$root2/archive", s"$root2/error",
+      s"$root2/checkpoint")
+    CdcStreamPipeline.bootstrap(seed.filter(col("trans_id") === hot),
+      loadTs, sparse)
+    val absent = (1L to 1000L).find(k => keyBucketFiles(sparse.serving,
+      Seq(("testdb", "retail_trans", k))).isEmpty).get
+    assert(CdcStreamPipeline.servingLookup(spark, sparse.serving,
+      "testdb", "retail_trans", absent).collect().isEmpty)
+    assert(BucketedState.lastFilesOpened.get().isEmpty)
+  }
+
+  test("driver-side point lookup: a null-pk state row never answers pk 0") {
+    import graft.streaming.BucketedState
+    import spark.implicits._
+    // a table name under which the null pk and pk 0 share a bucket, so
+    // the lookup really reads the null-pk row
+    val tbl = (0 until 200).map(i => s"t$i").find { t =>
+      spark.range(1).select(
+        BucketedState.bucketOf(xxhash64(lit("testdb"), lit(t), lit(0L)),
+          CdcStreamPipeline.ServingBuckets),
+        BucketedState.bucketOf(xxhash64(lit("testdb"), lit(t),
+          lit(null).cast("long")), CdcStreamPipeline.ServingBuckets))
+        .collect().forall(r => r.getInt(0) == r.getInt(1))
+    }.get
+    val snapshot = Seq[(Option[Long], String)]((Some(0L), "zero"),
+        (None, "nullpk")).toDF("trans_id", "customer_id")
+      .select(Envelope.dataSchema.map(f =>
+        (if (Set("trans_id", "customer_id")(f.name)) col(f.name)
+         else lit(null)).cast(f.dataType).as(f.name)): _*)
+    val root = tmpDir("srv_local_nullpk")
+    val sinks = Sinks(s"$root/serving", s"$root/archive", s"$root/error",
+      s"$root/checkpoint")
+    CdcStreamPipeline.bootstrap(snapshot, "2022-03-14T00:00:00.000000Z",
+      sinks, tableName = tbl)
+    assert(CdcStreamPipeline.servingTables(spark, sinks.serving)
+      .filter(col("trans_id").isNull).count() === 1)
+    val got = CdcStreamPipeline.servingLookup(spark, sinks.serving,
+      "testdb", tbl, 0L).collect()
+    assert(got.map(r => (r.getLong(0), r.getString(1))).toSeq ===
+      Seq((0L, "zero")))
+    assert(BucketedState.lastFilesOpened.get().size === 1)
   }
 
   test("bootstrap of an EMPTY snapshot yields a readable serving state and the stream proceeds (S1 edge)") {
