@@ -5,37 +5,29 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Key-partitioned versioned state — the 100 TB exit the flat
-  * [[VersionedState]] tenants document (SCALE.md "serving merge"): instead
-  * of rewriting the WHOLE state as one snapshot per batch, state rows
-  * hash-partition into the p buckets the newest manifest records
-  * (`bucket = pmod(xxhash64(key), p)`), each version directory carries
-  * ONLY the buckets the batch dirtied, and a pointer manifest maps every
-  * bucket to the version that last rewrote it — the LSM/Delta-style
-  * partition-level rewrite. Per-trigger write cost is O(dirty
-  * buckets), not O(state); readers resolve the manifest and
-  * partition-prune to the buckets they need; untouched buckets carry
-  * forward as POINTERS, never copies.
+/** Key-partitioned versioned state. State rows hash-partition into the
+  * p buckets the newest manifest records (`bucket = pmod(xxhash64(key),
+  * p)`); each version directory carries ONLY the buckets its batch
+  * dirtied, and its `_MANIFEST` maps every bucket to the version that
+  * last rewrote it. Per-trigger write cost is O(dirty buckets), readers
+  * resolve the manifest and read only the buckets they need, and
+  * untouched buckets carry forward as pointers, never copies.
   *
-  * Commit protocol (same exactly-once discipline as [[VersionedState]]):
-  * dirty buckets + the manifest land in a staging directory, then ONE
-  * rename publishes them — a torn write is invisible (no manifest under a
-  * `v=` name until the rename), and a retried batch whose rename already
-  * landed short-circuits on [[committed]]. The fold being replayed is
-  * deterministic from (prior manifest, batch), so a retry that lost the
-  * rename race re-creates identical content. Version pruning keeps every
-  * version referenced by the newest [[KeepManifests]] manifests — a pointer
-  * can reach arbitrarily far back (a never-touched bucket), so retention
-  * is reference-driven, never age-driven. */
+  * Commit: the dirty buckets and the manifest are built in
+  * [[VersionedState.stagingPath]] and published by
+  * [[VersionedState.publish]], so the exactly-once rules are the flat
+  * shelves' rules: a torn write is invisible (no manifest under a `v=`
+  * name before the rename), a retried batch whose version landed
+  * short-circuits on the version fence, and a retry that lost the
+  * rename race rebuilt identical content (the fold is deterministic
+  * from the prior manifest and the batch). Retention keeps every
+  * version the newest manifests reference: a pointer can reach
+  * arbitrarily far back (a never-touched bucket), so it is
+  * reference-driven, never age-driven. */
 object BucketedState {
 
   /** Partition column name every bucketed tenant shares. */
   val BucketCol = "bucket"
-
-  /** Retention horizon: every commit keeps the versions its newest
-    * `KeepManifests` manifests reference, so a reader that resolved one
-    * of them keeps its files. */
-  private val KeepManifests = 4
 
   /** Deterministic bucket of a state key — MUST be the same expression at
     * write (layout) and update (dirty-set) time. */
@@ -44,33 +36,6 @@ object BucketedState {
 
   private def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** True when `batchId` already committed — the retry short-circuit. */
-  def committed(spark: SparkSession, dir: String, batchId: Long): Boolean =
-    fsOf(spark, dir).exists(new Path(s"$dir/v=$batchId"))
-
-  private def manifestPath(version: Long, dir: String) =
-    new Path(s"$dir/v=$version/_MANIFEST")
-
-  /** The ONE parser for the on-disk manifest format (line 1
-    * `p=<buckets>`, then `<bucket>=<version>` per dirty-ever bucket —
-    * plain text, no JSON dependency). Both the reader and commit()'s
-    * retention pass go through here: a second hand-rolled parser in the
-    * prune path is how a format tweak deletes a still-referenced
-    * version. */
-  private def parseManifest(fs: FileSystem, dir: String, version: Long)
-      : (Int, Map[Int, Long]) = {
-    val in = fs.open(manifestPath(version, dir))
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.linesIterator.filter(_.nonEmpty).toSeq
-    val p = lines.head.stripPrefix("p=").toInt
-    val entries = lines.tail.map { l =>
-      val Array(b, ver) = l.split("=", 2)
-      b.toInt -> ver.toLong
-    }.toMap
-    (p, entries)
-  }
 
   /** Spec hook: count of manifest resolutions ([[latestManifest]]
     * calls) — a BATCHED point lookup must resolve exactly once for its
@@ -82,21 +47,15 @@ object BucketedState {
     * None ONLY when no state exists yet; a dir holding `v=` versions
     * none of which carry a manifest is a FOREIGN layout (e.g. a flat
     * VersionedState shelf) and throws — silently treating it as empty
-    * would discard the prior state in the next fold while committed()
-    * still honored its version numbers as a retry fence. */
+    * would discard the prior state in the next fold while the version
+    * fence still honored its version numbers. */
   def latestManifest(spark: SparkSession, dir: String)
       : Option[(Long, Int, Map[Int, Long])] = {
     manifestResolutions.incrementAndGet()
-    val fs = fsOf(spark, dir)
-    val root = new Path(dir)
-    if (!fs.exists(root)) return None
-    val versions = fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("v=")).flatMap(_.stripPrefix("v=").toLongOption)
-    val newest = versions.sorted.reverse.collectFirst {
-      case v if fs.exists(manifestPath(v, dir)) =>
-        val (p, entries) = parseManifest(fs, dir, v)
-        (v, p, entries)
-    }
+    val versions = VersionedState.listVersions(spark, dir)
+    val newest = versions.sorted.reverse.iterator.flatMap { v =>
+      VersionedState.manifest(spark, dir, v).map { case (p, m) => (v, p, m) }
+    }.nextOption()
     // commit() publishes the manifest and the version dir in ONE rename,
     // so every legitimate v= dir carries _MANIFEST
     if (newest.isEmpty && versions.nonEmpty)
@@ -129,35 +88,12 @@ object BucketedState {
   def commit(dirtyState: DataFrame, dir: String, batchId: Long, p: Int,
              dirtyBuckets: Set[Int], priorManifest: Map[Int, Long]): Unit = {
     val spark = dirtyState.sparkSession
-    val fs = fsOf(spark, dir)
-    val target = new Path(s"$dir/v=$batchId")
-    val staging = new Path(s"$dir/.staging-$batchId")
+    val staging = VersionedState.stagingPath(dir, batchId)
     dirtyState.write.mode("overwrite")
-      .partitionBy(BucketCol).parquet(staging.toString)
-    val manifest = priorManifest ++ dirtyBuckets.map(_ -> batchId)
-    val out = fs.create(new Path(staging, "_MANIFEST"), true)
-    try out.write(
-      (s"p=$p" +: manifest.toSeq.sorted.map { case (b, v) => s"$b=$v" })
-        .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(target)) fs.delete(staging, true)
-    else require(fs.rename(staging, target),
-      s"rename $staging -> $target failed")
-    // prune: drop crashed stagings, then every version not referenced by
-    // the newest KeepManifests manifests (pointer-driven retention)
-    fs.listStatus(new Path(dir)).toSeq.map(_.getPath)
-      .filter(q => q.getName.startsWith(".staging-") &&
-        q.getName.stripPrefix(".staging-").toLongOption.exists(_ < batchId))
-      .foreach(q => fs.delete(q, true))
-    val versions = fs.listStatus(new Path(dir)).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("v=")).flatMap(_.stripPrefix("v=").toLongOption)
-      .sorted.reverse
-    val live = versions.take(KeepManifests).flatMap { v =>
-      if (!fs.exists(manifestPath(v, dir))) Seq(v)
-      else v +: parseManifest(fs, dir, v)._2.values.toSeq
-    }.toSet
-    versions.filterNot(live).filter(_ < batchId)
-      .foreach(v => fs.delete(new Path(s"$dir/v=$v"), true))
+      .partitionBy(BucketCol).parquet(staging)
+    VersionedState.writeManifest(spark, staging, p,
+      priorManifest ++ dirtyBuckets.map(_ -> batchId))
+    VersionedState.publish(spark, dir, batchId)
     // refresh the version-keyed verification cache to THIS commit: the
     // writer knows the on-disk schema it just published (every fold path
     // verified the prior state before folding), so the next trigger's
@@ -177,7 +113,7 @@ object BucketedState {
     * engine's: no later batch is shadowed, and the retry fence keeps its
     * meaning.
     *
-    * Retention is the ordinary [[KeepManifests]] horizon: a live reader
+    * Retention is the ordinary [[VersionedState.publish]] horizon: a live reader
     * that resolved any of the last few manifests keeps its pinned
     * versions, and the pre-compaction versions age out through the
     * following commits' reference-driven pruning. Cost is one full-state
@@ -205,7 +141,7 @@ object BucketedState {
     * bucket lays out at its target p, which must be ≥ the on-disk p. A
     * smaller target is refused — a surviving old binary in a rolling
     * deploy would otherwise re-bucket the full state back and forth
-    * every trigger; a shrink is a reseed or migration, never a trigger.
+    * every trigger; a shrink is a reseed, never a trigger.
     * Passed as [[resolveForFold]]'s check, so it runs before the retry
     * fence. */
   private[streaming] def requireGrow(dir: String, targetP: Int,
@@ -213,7 +149,7 @@ object BucketedState {
     require(targetP >= onDiskP,
       s"$what fan-out at $dir can only GROW (on-disk p=$onDiskP, target " +
         s"$targetP) — a shrink (or a stale binary's old constant) must " +
-        "not re-bucket; reseed or migrate explicitly")
+        "not re-bucket; reseed explicitly")
 
   /** Report of one pruned fold — the spec seam for READ-side pruning
     * assertions: `candidateBuckets` is exactly the `want` set the fold
@@ -252,7 +188,8 @@ object BucketedState {
         (mp, m)
       case None => (freshP, Map.empty[Int, Long])
     }
-    if (committed(spark, dir, batchId)) None else Some((p, manifest))
+    if (VersionedState.committed(spark, dir, batchId)) None
+    else Some((p, manifest))
   }
 
   /** Every "path.to.leaf" in a struct, recursively — nullability and
@@ -280,7 +217,7 @@ object BucketedState {
 
   /** Dirs whose on-disk schema already passed [[verifySchema]] this
     * process — keyed on (latest version id, expected paths), NOT the dir
-    * alone: an out-of-band reseed/migration at the same path (the drift
+    * alone: an out-of-band reseed at the same path (the drift
     * error's own prescribed recovery) changes the latest version id, so
     * a still-alive driver that verified the OLD contents re-verifies the
     * new ones instead of skipping the guard. Within one process the only
@@ -300,7 +237,7 @@ object BucketedState {
     * the expected non-bucket field PATHS (recursively — a nested rename
     * inside the serving tenant's envelope structs is the same
     * corruption class one level down) BEFORE any read, failing with the
-    * reseed-or-migrate posture of the foreign-layout throw. Cost: one
+    * reseed posture of the foreign-layout throw. Cost: one
     * driver-side listing + footer inference per resolve.
     *
     * The newest version can be FILELESS (an all-pointer manifest from a
@@ -338,7 +275,7 @@ object BucketedState {
           s"${missing.toSeq.sorted.mkString(", ")} — on-disk paths are " +
           s"${actual.toSeq.sorted.mkString(", ")}. The tenant's state schema " +
           "changed across a deploy; reading would null the missing columns " +
-          "and corrupt the next fold. Reseed or migrate (SCALE.md: " +
+          "and corrupt the next fold. Reseed it (SCALE.md: " +
           "state-layout migrations)")
     }
     // cache on walk COMPLETION (data-bearing or legitimately empty): an
@@ -348,66 +285,38 @@ object BucketedState {
     verifiedDirs.put(dir, (version, want)): Unit
   }
 
-  /** Shared tail of every diff-based fold: read the wanted buckets,
-    * fold, diff old vs new to find the dirty buckets, commit ONLY
-    * those. One copy of the contract — a tenant cannot drift on the
-    * empty-dirty guard, the diff direction, or the key-locality check. */
+  /** Tail of the pruned fold: read the wanted buckets, fold, diff new
+    * against old to find the dirty buckets, commit ONLY those. The diff
+    * is one-sided: a fold through here never deletes a key, so every
+    * changed key appears in `merged` as a row `prev` lacks. */
   private def foldAndCommit(spark: SparkSession, dir: String,
       batchId: Long, p: Int, manifest: Map[Int, Long], schema: StructType,
-      keyCol: String, growOnly: Boolean, want: Option[Set[Int]])
+      keyCol: String, want: Set[Int])
       (fold: DataFrame => DataFrame): PrunedFold = {
-    val prev = read(spark, dir, schema, manifest, want).drop(BucketCol)
+    val prev = read(spark, dir, schema, manifest, Some(want))
+      .drop(BucketCol)
     val merged = fold(prev)
       .localCheckpoint() // feeds the diff and the dirty write
-    // growOnly (monotone MIN/SUM folds whose rows never vanish or
-    // relabel): one-sided diff suffices and skips the second anti-join
-    // per trigger; folds that relabel or delete need the symmetric diff
-    val appeared = merged.exceptAll(prev).select(col(keyCol))
-    val changed =
-      if (growOnly) appeared
-      else appeared.unionByName(prev.exceptAll(merged).select(col(keyCol)))
-    val dirty = changed
+    val dirty = merged.exceptAll(prev)
       .select(bucketOf(col(keyCol), p).as("b")).distinct()
       .collect().map(_.getInt(0)).toSet
-    // Key-locality guard for the pruned path: a fold that dirtied a
-    // bucket it never READ would publish that bucket from `merged`
-    // alone — an INCOMPLETE bucket (its untouched co-hashed keys were
-    // never loaded). That only happens when the fold broke the keyed
-    // contract (emitted or changed rows for keys outside the batch), so
-    // fail loudly instead of silently dropping state.
-    want.foreach(cand => require(dirty.subsetOf(cand),
-      s"pruned fold dirtied buckets ${(dirty -- cand).toSeq.sorted.mkString(",")} " +
+    // Key-locality guard: a fold that dirtied a bucket it never READ
+    // would publish that bucket from `merged` alone — an INCOMPLETE
+    // bucket (its untouched co-hashed keys were never loaded). That only
+    // happens when the fold broke the keyed contract (emitted or changed
+    // rows for keys outside the batch), so fail loudly instead of
+    // silently dropping state.
+    require(dirty.subsetOf(want),
+      s"pruned fold dirtied buckets ${(dirty -- want).toSeq.sorted.mkString(",")} " +
         s"it never read — the fold is not key-local (dirty keys must be " +
-        "a subset of the batch's keys)"))
+        "a subset of the batch's keys)")
     val dirtyState = merged
       .withColumn(BucketCol, bucketOf(col(keyCol), p))
       .filter(if (dirty.isEmpty) lit(false)
         else col(BucketCol).isin(dirty.toSeq: _*))
     commit(dirtyState, dir, batchId, p, dirty, manifest)
-    PrunedFold(want.getOrElse(manifest.keySet), dirty)
+    PrunedFold(want, dirty)
   }
-
-  /** The FULL-state fold protocol: hand the previous state (every
-    * bucket) to `fold`, diff, commit the dirty buckets. Writes are
-    * O(dirty buckets) but compute is O(state) per trigger — kept for
-    * folds that genuinely need the whole relation and as the parity
-    * baseline the pruned path is spec'd against. Keyed tenants whose
-    * fold is per-key (MIN/SUM) should use [[foldCommitPruned]]: same
-    * commit discipline, but per-trigger READ + compute are O(batch's
-    * buckets), not O(state). `keyCol` is the bucket key; `fold` must
-    * return a relation in `schema` minus [[BucketCol]].
-    * [[JoinViewMaintenance]] stays OUTSIDE this helper by design: its
-    * dirty set derives from the batch's touched keys with
-    * partition-pruned reads, never a full-state diff. */
-  def foldCommit(spark: SparkSession, dir: String, batchId: Long,
-                 freshP: Int, schema: StructType, keyCol: String,
-                 what: String, growOnly: Boolean = false)
-                (fold: DataFrame => DataFrame): Unit =
-    resolveForFold(spark, dir, batchId, freshP, schema, what).foreach {
-      case (p, manifest) =>
-        foldAndCommit(spark, dir, batchId, p, manifest, schema, keyCol,
-          growOnly, want = None)(fold)
-    }
 
   /** Batch-key-PRUNED fold — the form that makes a diff-based tenant's
     * per-trigger cost O(batch), not O(state) (the
@@ -431,7 +340,7 @@ object BucketedState {
     * short-circuited a retry). */
   def foldCommitPruned(spark: SparkSession, dir: String, batchId: Long,
                        freshP: Int, schema: StructType, keyCol: String,
-                       what: String, growOnly: Boolean = false)
+                       what: String)
                       (batchRel: DataFrame)
                       (fold: (DataFrame, DataFrame) => DataFrame)
       : Option[PrunedFold] =
@@ -443,76 +352,8 @@ object BucketedState {
           .select(bucketOf(col(keyCol), p).as("b")).distinct()
           .collect().map(_.getInt(0)).toSet // batch-key-bounded collect
         foldAndCommit(spark, dir, batchId, p, manifest, schema, keyCol,
-          growOnly, want = Some(candidates))(prev => fold(prev, batch))
+          candidates)(prev => fold(prev, batch))
     }
-
-  /** One-shot migration of a flat [[VersionedState]] shelf into the
-    * bucketed layout — the codified form of the reseed-or-migrate
-    * posture the foreign-layout throw prescribes (and the serving
-    * bootstrap's v=-1 pattern generalized,
-    * [[CdcStreamPipeline.bootstrapEnvelope]]): read the flat shelf's
-    * `latestSnapshot`, bucket it on `keyCol`, and commit it at
-    * `reservedId` — an id BELOW every id the stream has used or will
-    * use (default -1, below engine batch ids by construction) — so the
-    * stream's next fold resolves it as ordinary prior state and the
-    * retry fence keeps its meaning for every real batch id.
-    *
-    * Supports in-place cutover (`dir == flatDir`): the old manifest-less
-    * `v=` dirs stay honored by [[committed]] as retry fences for the
-    * batches already folded into the snapshot (exactly right — a
-    * replayed pre-migration batch must skip), resolution ignores them
-    * (no `_MANIFEST`), and the first post-migration commits age them out
-    * through reference-driven pruning. Unmigrated dirs keep the loud
-    * foreign-layout throw — this helper is the only sanctioned bridge.
-    *
-    * `schema`'s non-bucket fields are SELECTED from the snapshot (not
-    * inferred), so a flat shelf that drifted from the tenant's expected
-    * columns fails loudly at analysis instead of materializing NULLs —
-    * the same guarantee [[verifySchema]] gives live tenants.
-    *
-    * FRESH-DIR PRECONDITION (`dir != flatDir`): pair the migration with
-    * a FRESH stream checkpoint unless the tenant's fold is idempotent.
-    * The new dir carries no `v=` retry fences for the batches already
-    * folded into the flat snapshot, so reusing the OLD checkpoint
-    * replays those pre-migration batches into the migrated state — a
-    * non-idempotent fold (SUM, MG counters) double-counts them
-    * silently. In-place cutover has no such hazard: the flat shelf's
-    * own `v=` dirs keep fencing exactly those ids (the mirror of
-    * [[CdcStreamPipeline.rebuildServingFromArchive]]'s precondition
-    * 2 — round-12 ADVICE item 4). */
-  def migrateFromVersionedState(spark: SparkSession, flatDir: String,
-      dir: String, schema: StructType, keyCol: String, numBuckets: Int,
-      reservedId: Long = -1L): Unit = {
-    val snap = VersionedState.latestSnapshot(spark, flatDir).getOrElse(
-      throw new IllegalStateException(
-        s"no flat VersionedState snapshot under $flatDir to migrate"))
-    val fs = fsOf(spark, dir)
-    val existing =
-      if (!fs.exists(new Path(dir))) Seq.empty
-      else fs.listStatus(new Path(dir)).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("v=")).flatMap(_.stripPrefix("v=").toLongOption)
-    require(existing.forall(v => !fs.exists(manifestPath(v, dir))),
-      s"$dir already holds a BucketedState manifest — refusing to migrate " +
-        "over a live bucketed tenant")
-    // the "old v= dirs stay honored as retry fences" reasoning holds
-    // ONLY in place, where those ids ARE the flat shelf's own folded
-    // batches — a fresh-dir migration must not adopt unrelated debris
-    // as fences (batches 0..k of the new stream would silently skip)
-    require(dir == flatDir || existing.isEmpty,
-      s"fresh-dir migration target $dir is not empty (v= ids " +
-        s"${existing.sorted.mkString(",")}) — foreign version dirs would " +
-        "fence batches that were never folded; migrate in place or pick " +
-        "an empty target")
-    require(existing.forall(_ > reservedId),
-      s"migration reservedId=$reservedId must be below every existing v= " +
-        s"id under $dir (found ${existing.sorted.mkString(",")}) — the " +
-        "reserved id must precede the stream's whole sequence")
-    val cols = schema.fieldNames.filterNot(_ == BucketCol).map(col)
-    val bucketed = snap.select(cols.toSeq: _*)
-      .withColumn(BucketCol, bucketOf(col(keyCol), numBuckets))
-    commit(bucketed, dir, reservedId, numBuckets,
-      (0 until numBuckets).toSet, Map.empty)
-  }
 
   /** Newest committed full state of a tenant: every bucket at the
     * on-disk p, behind the schema guard. */

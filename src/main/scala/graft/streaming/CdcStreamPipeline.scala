@@ -154,14 +154,29 @@ object CdcStreamPipeline {
     val dlq = parsed
       .filter(Envelope.corrupt || col("event_ts").isNull)
       .select(col("value"))
-      .writeStream.foreachBatch { (bad: DataFrame, batchId: Long) =>
-        // overwrite of the batch-scoped directory → a retried batch
-        // replaces its own output instead of appending twice
-        bad.write.mode("overwrite").text(s"${sinks.error}/batch_id=$batchId")
-      }.trigger(trigger)
+      .writeStream.foreachBatch(writeErrors(sinks.error) _)
+      .trigger(trigger)
       .option("checkpointLocation", sinks.checkpoint + "_dlq").start()
 
     (main, dlq)
+  }
+
+  /** The DLQ sink of one batch: its lines land in
+    * `<errorRoot>/batch_id=<batchId>` by overwrite, so a retried batch
+    * replaces its own output instead of appending twice. A batch without
+    * a corrupt line leaves no directory: the written dir is dropped when
+    * none of its data files holds a byte (a text line always does), which
+    * costs one listing and no second pass over the batch. */
+  private[streaming] def writeErrors(errorRoot: String)(bad: DataFrame,
+                                                        batchId: Long): Unit = {
+    val out = new org.apache.hadoop.fs.Path(s"$errorRoot/batch_id=$batchId")
+    bad.write.mode("overwrite").text(out.toString)
+    val fs = out.getFileSystem(bad.sparkSession.sparkContext.hadoopConfiguration)
+    val empty = fs.listStatus(out).forall { f =>
+      val n = f.getPath.getName
+      n.startsWith("_") || n.startsWith(".") || f.getLen == 0
+    }
+    if (empty) fs.delete(out, true): Unit
   }
 
   /** S1 `full-load-and-cdc` (reference dms_aurora_mysql_to_kinesis.py:145):
@@ -211,7 +226,7 @@ object CdcStreamPipeline {
   /** The serving key's pk COLUMN within `data.*` — a DEPLOYMENT
     * constant, not a per-call choice: k = xxhash64(schema, table, pk)
     * is PERSISTED in every state row, so this name is baked into a
-    * serving dir for its whole life (changing it is a reseed/migration,
+    * serving dir for its whole life (changing it is a reseed,
     * never a config flip). Every table of a wildcard stream shares the
     * envelope row shape ([[Envelope.dataSchema]] — the reference's
     * retail_trans DDL, README.md), so one column name serves the whole

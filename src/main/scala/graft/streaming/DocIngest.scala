@@ -185,9 +185,8 @@ object DocIngest {
     val dlq = parsed
       .filter(corrupt)
       .select(col("value"))
-      .writeStream.foreachBatch { (bad: DataFrame, batchId: Long) =>
-        bad.write.mode("overwrite").text(s"${sinks.error}/batch_id=$batchId")
-      }.trigger(trigger)
+      .writeStream.foreachBatch(CdcStreamPipeline.writeErrors(sinks.error) _)
+      .trigger(trigger)
       .option("checkpointLocation", sinks.checkpoint + "_dlq").start()
 
     (main, rejects, dlq)

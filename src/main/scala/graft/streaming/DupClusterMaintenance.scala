@@ -43,8 +43,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * amplification is O(changed labels), bounded by the batch's
   * connectivity effect. Ids must be long (the repo-wide doc-id type).
   * A flat VersionedState dir fails loudly ("not a BucketedState
-  * layout"); reseed by re-folding, or migrate it once through
-  * [[BucketedState.migrateFromVersionedState]].
+  * layout"); reseed it by re-folding into a fresh dir.
   *
   * Exactly-once: cluster folding is NOT idempotent under retry in
   * general (a re-run could observe torn state mid-write), so each fold

@@ -3,38 +3,29 @@ package graft.streaming
 import graft.operators.MgSummary
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Incrementally maintained frequent-items shelf — the third tenant of
-  * the versioned-state protocol (after the serving rollup and the HLL
-  * shelf): each micro-batch compresses to its own Misra-Gries summary
-  * relation (≤ groups × (k+1) rows) and folds into the persisted state,
-  * so "top talkers per table, ever" serves at any moment from the
-  * summary alone. The streaming answer to q98's batch heavy hitters:
-  * that shape re-scans the corpus to recount candidates exactly; a
-  * stream has no corpus to re-scan, and the mergeable-MG bound
-  * (undercount ≤ n/(k+1), operators/MgSummary.scala) is exactly what
-  * survives without one.
+/** Incrementally maintained frequent-items shelf: each micro-batch
+  * compresses to its own Misra-Gries summary relation (≤ groups × (k+1)
+  * rows) and folds into the persisted state, so "top talkers per table,
+  * ever" serves at any moment from the summary alone, within the
+  * mergeable-MG bound (undercount ≤ n/(k+1), operators/MgSummary.scala).
   *
-  * MG merge is NOT idempotent (counters add), so the versioned commit is
-  * load-bearing here the way it is for the SUM rollup: a retried batch
-  * must short-circuit on the committed version or it double-counts. */
+  * MG merge is NOT idempotent (counters add): the version fence of
+  * [[VersionedState.fold]] is what keeps a retried batch from
+  * double-counting. */
 object FrequentItemsMaintenance {
 
   /** Fold one micro-batch into the summary at `dir` — call from
     * foreachBatch. `k` must match across all folds into one dir. */
   def update(dir: String, batch: DataFrame, batchId: Long,
-             grpCol: String, itemCol: String, k: Int): Unit = {
-    val spark = batch.sparkSession
-    if (VersionedState.committed(spark, dir, batchId)) return
-    val part = MgSummary.build(batch, grpCol, itemCol, k)
-    val merged = VersionedState.latestSnapshot(spark, dir)
-      .map(old => MgSummary.merge(old, part, k)).getOrElse(part)
-    VersionedState.commit(merged, dir, batchId)
-  }
+             grpCol: String, itemCol: String, k: Int): Unit =
+    VersionedState.fold(batch.sparkSession, dir, batchId) { old =>
+      val part = MgSummary.build(batch, grpCol, itemCol, k)
+      old.map(MgSummary.merge(_, part, k)).getOrElse(part)
+    }
 
   /** Newest committed summary relation (grp, item, c). */
   def snapshot(spark: SparkSession, dir: String): DataFrame =
-    VersionedState.latestSnapshot(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no frequent-items state under $dir"))
+    VersionedState.readState(spark, dir, "frequent-items")
 
   /** Serve candidates (grp, item, c, n) from the persisted summary. */
   def candidates(spark: SparkSession, dir: String): DataFrame =

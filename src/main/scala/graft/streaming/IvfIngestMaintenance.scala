@@ -306,7 +306,7 @@ object IvfIngestMaintenance {
     val staging = VersionedState.stagingPath(tenantRoot, 0L)
     Ivf.writeIndex(corpus, idCol, vecCol, nlist, staging, iters, sampleMod)
     writeBaseline(spark, staging)
-    VersionedState.commitStaged(spark, tenantRoot, 0L)
+    VersionedState.publish(spark, tenantRoot, 0L)
     s"$tenantRoot/v=0"
   }
 
@@ -321,14 +321,13 @@ object IvfIngestMaintenance {
     *      depend on the quantizer) at the VersionedState staging root —
     *      a crash here leaves only the invisible staging dir, healed by
     *      the next attempt's wholesale overwrite;
-    *   3. publish with ONE atomic rename ([[VersionedState
-    *      .commitStaged]]) — the repoint. A live query that resolved
-    *      the old version finishes against it (old versions linger
-    *      `keepVersions` deep); the next resolution serves the new one.
+    *   3. publish with ONE atomic rename ([[VersionedState.publish]])
+    *      — the repoint. A live query that resolved the old version
+    *      finishes against it (the newest versions linger for such
+    *      readers); the next resolution serves the new one.
     * Returns the new version's root. */
   def retrain(spark: SparkSession, tenantRoot: String, nlist: Int,
-              iters: Int = 3, sampleMod: Int = 1,
-              keepVersions: Int = 2): String = {
+              iters: Int = 3, sampleMod: Int = 1): String = {
     import graft.operators.IndexForget
     val (v, cur) = currentVersion(spark, tenantRoot).getOrElse(
       throw new IllegalArgumentException(
@@ -351,7 +350,7 @@ object IvfIngestMaintenance {
     if (pfs.exists(new org.apache.hadoop.fs.Path(probeSrc)))
       spark.read.parquet(probeSrc)
         .coalesce(1).write.mode("overwrite").parquet(s"$staging/probe_set")
-    VersionedState.commitStaged(spark, tenantRoot, v + 1, keepVersions)
+    VersionedState.publish(spark, tenantRoot, v + 1)
     s"$tenantRoot/v=${v + 1}"
   }
 

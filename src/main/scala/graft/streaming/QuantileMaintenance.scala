@@ -3,21 +3,16 @@ package graft.streaming
 import graft.operators.QuantileSample
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Incrementally maintained quantile-sample shelf — the fourth tenant
-  * of the versioned-state protocol, completing the streaming sketch
-  * shelf (HLL distincts, MG frequent items, and now quantiles): each
-  * micro-batch builds its bottom-k hash-rank sample and folds it into
-  * the persisted sketch, so per-group p50/p95/p99 serve from ≤ k rows
-  * per group at any moment. Bottom-k over the md5 ring is a
-  * semilattice (PropertySpec pins merge == rebuild), so N incremental
-  * folds sample identically to one build over everything delivered —
-  * the estimate after any prefix of batches is EXACTLY the estimate a
-  * batch job would compute over that prefix.
+/** Incrementally maintained quantile-sample shelf: each micro-batch
+  * builds its bottom-k hash-rank sample and folds it into the persisted
+  * sketch, so per-group p50/p95/p99 serve from ≤ k rows per group at any
+  * moment. Bottom-k over the md5 ring is a semilattice (PropertySpec
+  * pins merge == rebuild), so the estimate after any prefix of batches
+  * is EXACTLY the estimate a batch job computes over that prefix.
   *
   * The fold dedups on (grp, key) before re-ranking, so a retried batch
-  * would be a no-op even without the version guard — but the guard
-  * still short-circuits the work and keeps the directory protocol
-  * uniform across all four shelf tenants. */
+  * would not change the sample; the version fence of
+  * [[VersionedState.fold]] skips its work all the same. */
 object QuantileMaintenance {
 
   /** Fold one micro-batch into the sketch at `dir` — call from
@@ -25,19 +20,16 @@ object QuantileMaintenance {
     * (QuantileSample.merge is loud if it doesn't). */
   def update(dir: String, batch: DataFrame, batchId: Long,
              groupCol: String, rowKeyCol: String, valueCol: String,
-             k: Int): Unit = {
-    val spark = batch.sparkSession
-    if (VersionedState.committed(spark, dir, batchId)) return
-    val part = QuantileSample.build(batch, groupCol, rowKeyCol, valueCol, k)
-    val merged = VersionedState.latestSnapshot(spark, dir)
-      .map(old => QuantileSample.merge(old, part)).getOrElse(part)
-    VersionedState.commit(merged, dir, batchId)
-  }
+             k: Int): Unit =
+    VersionedState.fold(batch.sparkSession, dir, batchId) { old =>
+      val part =
+        QuantileSample.build(batch, groupCol, rowKeyCol, valueCol, k)
+      old.map(QuantileSample.merge(_, part)).getOrElse(part)
+    }
 
   /** Newest committed sketch relation (grp, key, h, v, rn, k). */
   def snapshot(spark: SparkSession, dir: String): DataFrame =
-    VersionedState.latestSnapshot(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no quantile state under $dir"))
+    VersionedState.readState(spark, dir, "quantile")
 
   /** Serve per-group quantile estimates from the persisted sample. */
   def estimates(spark: SparkSession, dir: String, qs: Seq[Double]): DataFrame =

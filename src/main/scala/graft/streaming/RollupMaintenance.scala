@@ -4,25 +4,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-/** Incrementally maintained serving rollup — the streaming counterpart of
-  * q89's rollup-reuse: instead of recomputing hourly op statistics from
-  * the whole archive per dashboard query (S15, the reference's OpenSearch
-  * aggregation role), each micro-batch folds its PARTIAL aggregate into a
-  * persisted rollup. Counts and DECIMAL sums merge associatively, so
-  * incremental maintenance is bit-identical to a one-shot aggregation
-  * over everything the stream has delivered (RollupSpec pins this).
+/** Incrementally maintained serving rollup: each micro-batch folds
+  * its PARTIAL (hour × schema × table × op) aggregate into a persisted
+  * rollup, so hourly op statistics serve without recomputing over the
+  * archive. Counts and DECIMAL sums merge associatively, so incremental
+  * maintenance is bit-identical to a one-shot aggregation over
+  * everything the stream has delivered (RollupSpec pins this).
   *
-  * Exactly-once under at-least-once batch execution comes from the same
-  * versioned-directory protocol as the serving merge: a batch commits its
-  * merged rollup as `v=<batchId>` (staging + rename); a RETRIED batch
-  * whose rename already committed finds the version present and skips —
-  * critical here, because unlike last-write-wins a SUM rollup is NOT
-  * idempotent, and double-merging a batch would double its counts.
-  *
-  * Scale: the per-batch partial reduces the batch to (hour × op) rows
-  * before anything is read or written; the merge unions two rollup-sized
-  * tables — state is bounded by the key space, never by stream volume.
-  */
+  * A SUM rollup is NOT idempotent: the version fence of
+  * [[VersionedState.fold]] is what keeps a retried batch from
+  * double-counting. State is bounded by the key space, never by stream
+  * volume: the merge unions two rollup-sized tables. */
 object RollupMaintenance {
 
   private val Amt = DecimalType(18, 2)
@@ -52,17 +44,12 @@ object RollupMaintenance {
 
   /** Fold one micro-batch into the persisted rollup at `rollupDir`.
     * Call from the stream's foreachBatch with the batch's parsed good
-    * rows. Idempotent per batchId via VersionedState's commit protocol. */
-  def update(rollupDir: String, batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    if (VersionedState.committed(spark, rollupDir, batchId)) return
-    val merged = merge(
-      VersionedState.latestSnapshot(spark, rollupDir), partial(batch))
-    VersionedState.commit(merged, rollupDir, batchId)
-  }
+    * rows; idempotent per batchId. */
+  def update(rollupDir: String, batch: DataFrame, batchId: Long): Unit =
+    VersionedState.fold(batch.sparkSession, rollupDir, batchId)(
+      merge(_, partial(batch)))
 
   /** Newest complete rollup state. */
   def snapshot(spark: SparkSession, rollupDir: String): DataFrame =
-    VersionedState.latestSnapshot(spark, rollupDir).getOrElse(
-      throw new IllegalStateException(s"no rollup state under $rollupDir"))
+    VersionedState.readState(spark, rollupDir, "rollup")
 }

@@ -3,41 +3,30 @@ package graft.streaming
 import graft.operators.Hll
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Incrementally maintained HLL sketch shelf — the STREAMING counterpart
-  * of q115/q117's batch sketch rollup: each micro-batch builds its own
-  * per-group HLL relation (KBs) and folds it into the persisted sketch
-  * state, so "distinct users per table, ever" is servable at any moment
-  * from registers alone — no rescan of the archive, no per-key streaming
-  * state. This is the sketch answer to the serving question the
-  * reference answers by re-aggregating OpenSearch (S15): the state is
-  * `groups × 2^lgK` registers FOREVER, while a dropDuplicates-based
-  * distinct count holds every key ever seen.
+/** Incrementally maintained HLL sketch shelf: each micro-batch builds
+  * its per-group HLL relation and folds it into the persisted sketch
+  * state, so "distinct users per table, ever" serves at any moment from
+  * registers alone — no archive rescan, no per-key streaming state. The
+  * state is `groups × 2^lgK` registers whatever the stream's volume.
   *
   * HLL union is a register-wise semilattice (PropertySpec pins merge ==
   * rebuild), so N incremental folds estimate identically to one build
-  * over everything delivered; the versioned commit (VersionedState)
-  * makes each fold exactly-once under batch retries — a re-merged batch
-  * would not change registers (idempotent max), but the version protocol
-  * also keeps retried batches from observing torn state, and is the same
-  * discipline every non-idempotent state in this engine uses. */
+  * over everything delivered. Each fold is one [[VersionedState.fold]],
+  * so a retried batch skips and no reader sees a torn state. */
 object SketchMaintenance {
 
   /** Fold one micro-batch into the sketch state at `sketchDir` — call
     * from foreachBatch. `groupCol`/`keyCol` name the batch's columns. */
   def update(sketchDir: String, batch: DataFrame, batchId: Long,
-             groupCol: String, keyCol: String, lgK: Int = 12): Unit = {
-    val spark = batch.sparkSession
-    if (VersionedState.committed(spark, sketchDir, batchId)) return
-    val part = Hll.build(batch, groupCol, keyCol, lgK)
-    val merged = VersionedState.latestSnapshot(spark, sketchDir)
-      .map(old => Hll.merge(old, part)).getOrElse(part)
-    VersionedState.commit(merged, sketchDir, batchId)
-  }
+             groupCol: String, keyCol: String, lgK: Int = 12): Unit =
+    VersionedState.fold(batch.sparkSession, sketchDir, batchId) { old =>
+      val part = Hll.build(batch, groupCol, keyCol, lgK)
+      old.map(Hll.merge(_, part)).getOrElse(part)
+    }
 
   /** Newest committed sketch relation `(grp, sketch, lgk)`. */
   def snapshot(spark: SparkSession, sketchDir: String): DataFrame =
-    VersionedState.latestSnapshot(spark, sketchDir).getOrElse(
-      throw new IllegalStateException(s"no sketch state under $sketchDir"))
+    VersionedState.readState(spark, sketchDir, "sketch")
 
   /** Serve the distinct-count estimates from the registers alone. */
   def estimates(spark: SparkSession, sketchDir: String): DataFrame =

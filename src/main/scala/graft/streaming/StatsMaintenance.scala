@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * The fold is a SUM of counts per value — commutative, so delivery
   * order cannot change the converged state (the spec pins reversed-order
   * parity). Unlike the vocabulary tenant's MIN fold, addition is NOT
-  * idempotent: the [[BucketedState.committed]] version fence is
+  * idempotent: the [[VersionedState.committed]] version fence is
   * load-bearing here — a redelivered batch that re-folded would
   * double-count, and the spec pins that a retry is a no-op BECAUSE the
   * fence short-circuits it.
@@ -50,7 +50,7 @@ object StatsMaintenance {
   def update(dir: String, values: DataFrame, batchId: Long)
       : Option[BucketedState.PrunedFold] =
     BucketedState.foldCommitPruned(values.sparkSession, dir, batchId,
-      NumBuckets, stateSchema, "v", "stats", growOnly = true)(
+      NumBuckets, stateSchema, "v", "stats")(
       batchCounts(values)) { (prev, batch) =>
       prev.unionByName(batch)
         .groupBy("v").agg(sum(col("cnt")).as("cnt"))

@@ -73,7 +73,7 @@ object VocabMaintenance {
   def update(dir: String, docs: DataFrame, batchId: Long)
       : Option[BucketedState.PrunedFold] =
     BucketedState.foldCommitPruned(docs.sparkSession, dir, batchId,
-      NumBuckets, stateSchema, "f", "vocabulary", growOnly = true)(
+      NumBuckets, stateSchema, "f", "vocabulary")(
       batchMins(docs)) { (prev, batch) =>
       prev.unionByName(batch)
         .groupBy("f").agg(min(col("first_doc")).as("first_doc"))

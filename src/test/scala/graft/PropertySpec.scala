@@ -746,9 +746,8 @@ class PropertySpec extends SparkTestBase {
         // keys on the id, never the content)
         assert(StatsMaintenance.update(rootA,
           Seq(999L).toDF("v"), i.toLong).isEmpty)
-        BucketedState.foldCommit(spark, rootB, i.toLong,
-          StatsMaintenance.NumBuckets, schema, "v", "stats",
-          growOnly = true) { prev =>
+        BucketedState.foldCompact(spark, rootB, i.toLong,
+          StatsMaintenance.NumBuckets, schema, "v", "stats") { prev =>
           prev.unionByName(
               vs.toDF("v").groupBy("v").agg(count(lit(1)).as("cnt")))
             .groupBy("v").agg(sum(col("cnt")).as("cnt"))

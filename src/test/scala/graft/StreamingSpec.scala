@@ -48,21 +48,25 @@ class StreamingSpec extends SparkTestBase {
     sinks
   }
 
+  /** Five lines the DLQ must take: two unparseable, a data record
+    * without a row image, a null record-type, a malformed timestamp. */
+  private val corruptLines =
+    "this is not json\n{\"also\": \"not an envelope\"\n" +
+    // parseable metadata but no row image: a data record that must hit
+    // the DLQ, not materialize a null-key serving row
+    """{"metadata": {"timestamp": "2022-03-14T14:59:59.000000Z", "record-type": "data", "operation": "insert", "partition-key-type": "primary-key", "schema-name": "testdb", "table-name": "retail_trans", "transaction-id": 999999}}""" + "\n" +
+    // metadata present but record-type null: the three-valued-logic
+    // trap — must reach the DLQ, not vanish from both streams
+    """{"metadata": {"timestamp": "2022-03-14T14:59:58.000000Z"}}""" + "\n" +
+    // present-but-MALFORMED timestamp: under ANSI mode a plain
+    // to_timestamp would throw and crash-loop the stream — must DLQ
+    """{"data": {"trans_id": 9, "customer_id": "x", "event": "visit", "sku": "AA0000AAAA", "amount": 1, "device": "pc", "trans_datetime": "2022-03-14T00:00:00Z"}, "metadata": {"timestamp": "not-a-timestamp", "record-type": "data", "operation": "insert", "partition-key-type": "primary-key", "schema-name": "testdb", "table-name": "retail_trans", "transaction-id": 999998}}""" + "\n"
+
   test("fixture replay: streaming serving snapshot == batch materialization; corrupt lines hit the DLQ") {
     val src = tmpDir("cdc_src")
     Files.copy(Paths.get(Tables.cdcFixturePath),
       Paths.get(s"$src/cdc.jsonl"), StandardCopyOption.REPLACE_EXISTING)
-    Files.writeString(Paths.get(s"$src/bad.jsonl"),
-      "this is not json\n{\"also\": \"not an envelope\"\n" +
-        // parseable metadata but no row image: a data record that must hit
-        // the DLQ, not materialize a null-key serving row
-        """{"metadata": {"timestamp": "2022-03-14T14:59:59.000000Z", "record-type": "data", "operation": "insert", "partition-key-type": "primary-key", "schema-name": "testdb", "table-name": "retail_trans", "transaction-id": 999999}}""" + "\n" +
-        // metadata present but record-type null: the three-valued-logic
-        // trap — must reach the DLQ, not vanish from both streams
-        """{"metadata": {"timestamp": "2022-03-14T14:59:58.000000Z"}}""" + "\n" +
-        // present-but-MALFORMED timestamp: under ANSI mode a plain
-        // to_timestamp would throw and crash-loop the stream — must DLQ
-        """{"data": {"trans_id": 9, "customer_id": "x", "event": "visit", "sku": "AA0000AAAA", "amount": 1, "device": "pc", "trans_datetime": "2022-03-14T00:00:00Z"}, "metadata": {"timestamp": "not-a-timestamp", "record-type": "data", "operation": "insert", "partition-key-type": "primary-key", "schema-name": "testdb", "table-name": "retail_trans", "transaction-id": 999998}}""" + "\n")
+    Files.writeString(Paths.get(s"$src/bad.jsonl"), corruptLines)
     val listener = new graft.streaming.MetricsListener
     spark.streams.addListener(listener)
     val t0 = System.nanoTime()
@@ -109,6 +113,26 @@ class StreamingSpec extends SparkTestBase {
       s"listener counted ${listener.totalInputRows} input rows")
   }
 
+  test("DLQ: a batch without a corrupt line leaves no error dir; the corrupt lines still land") {
+    val src = tmpDir("cdc_dlq_src")
+    Files.copy(Paths.get(Tables.cdcFixturePath),
+      Paths.get(s"$src/a_clean.jsonl"), StandardCopyOption.REPLACE_EXISTING)
+    Files.writeString(Paths.get(s"$src/b_bad.jsonl"), corruptLines)
+    val root = tmpDir("cdc_dlq_out")
+    val sinks = Sinks(s"$root/serving", s"$root/archive", s"$root/error",
+      s"$root/checkpoint")
+    // one file per trigger: one clean batch and one with the 5 lines
+    val lines = spark.readStream.option("maxFilesPerTrigger", 1).text(src)
+    val (main, dlq) = CdcStreamPipeline.start(lines, sinks,
+      Trigger.AvailableNow())
+    assert(main.awaitTermination(120000) && dlq.awaitTermination(120000))
+    assert(dlq.recentProgress.count(_.numInputRows > 0) === 2)
+    val errDirs = new java.io.File(sinks.error).listFiles()
+      .map(_.getName).filter(_.startsWith("batch_id="))
+    assert(errDirs.length === 1,
+      s"a clean batch left an error dir: ${errDirs.toSeq}")
+    assert(spark.read.text(sinks.error).count() === 5)
+  }
   test("serving rebuild from archive: a wiped serving dir recovers byte-equal from the archive sink; checkpoint replays after recovery are no-ops") {
     import graft.streaming.BucketedState
     // normal life: the full fixture through the real pipeline
@@ -1452,7 +1476,7 @@ class StreamingSpec extends SparkTestBase {
     // dirties no bucket: the version commits (retry fence) but rewrites
     // zero bucket directories — write amplification is new-vocab-bounded
     VocabMaintenance.update(shelf, slices(0), 3L)
-    assert(BucketedState.committed(spark, shelf, 3L))
+    assert(graft.streaming.VersionedState.committed(spark, shelf, 3L))
     assert(BucketedState.bucketDirs(spark, shelf, 3L) === Set.empty[Int])
     assert(fsMap(VocabMaintenance.firstSeen(spark, shelf)) === servedFs)
 
@@ -1485,7 +1509,7 @@ class StreamingSpec extends SparkTestBase {
       s"pruned read must touch only bucket=$wantB files: ${prunedFiles.toSeq}")
 
     // parity vs the FULL fold: a twin shelf folded through the
-    // unpruned foldCommit path converges to the identical state
+    // full-state foldCompact path converges to the identical state
     val shelfFull = tmpDir("vocab_state_full") + "/vocab"
     val fullSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("f",
@@ -1502,9 +1526,8 @@ class StreamingSpec extends SparkTestBase {
         .select(col("doc_id"), explode(TextOps.trigrams(col("w"))).as("s"))
         .select(col("doc_id"), xxhash64(col("s")).as("f"))
         .groupBy("f").agg(min(col("doc_id")).as("first_doc"))
-      BucketedState.foldCommit(spark, shelfFull, i.toLong,
-        VocabMaintenance.NumBuckets, fullSchema, "f", "vocabulary",
-        growOnly = true) { prev =>
+      BucketedState.foldCompact(spark, shelfFull, i.toLong,
+        VocabMaintenance.NumBuckets, fullSchema, "f", "vocabulary") { prev =>
         prev.unionByName(mins)
           .groupBy("f").agg(min(col("first_doc")).as("first_doc"))
       }
@@ -1687,7 +1710,7 @@ class StreamingSpec extends SparkTestBase {
   private def vfold(dir: String, id: Long, vs: Seq[Long])
       : Option[graft.streaming.BucketedState.PrunedFold] =
     graft.streaming.BucketedState.foldCommitPruned(spark, dir, id, 8,
-      vcntSchema, "v", "vcnt", growOnly = true)(vcounts(vs)) {
+      vcntSchema, "v", "vcnt")(vcounts(vs)) {
       (prev, batch) => prev.unionByName(batch)
         .groupBy("v").agg(sum(col("cnt")).as("cnt"))
     }
@@ -1876,7 +1899,7 @@ class StreamingSpec extends SparkTestBase {
         "vcnt")(identity)
     }
     assert(err.getMessage.contains("v") &&
-      err.getMessage.contains("Reseed or migrate"),
+      err.getMessage.contains("Reseed"),
       s"a compacting fold must hit the drift guard, got: ${err.getMessage}")
 
     // version-keyed verification cache: a dir that PASSED verification
@@ -1913,58 +1936,90 @@ class StreamingSpec extends SparkTestBase {
       s"join-view read must hit the drift guard: ${err3.getMessage}")
   }
 
-  test("flat VersionedState migration: one-shot migrate at a reserved id in place; replayed pre-migration batches fence; folds resume on top; unmigrated dirs still throw") {
-    import graft.streaming.{BucketedState, VersionedState}
+  test("versioned publish, flat and bucketed: a crashed staging is invisible and its retry republishes; a retry over a published version drops its staging; retention keeps the newest 4 versions and what their manifests reference") {
+    import graft.streaming.{BucketedState, StatsMaintenance, VersionedState}
     import spark.implicits._
-    val flat = tmpDir("flat_migrate") + "/vcnt"
-    // the flat shelf's history: two full-snapshot commits at engine ids
-    VersionedState.commit(Seq((1L, 2L), (2L, 1L)).toDF("v", "cnt"), flat, 0L)
-    VersionedState.commit(
-      Seq((1L, 2L), (2L, 1L), (3L, 1L)).toDF("v", "cnt"), flat, 1L)
-
-    // unmigrated: the bucketed engine refuses the foreign layout — on
-    // read AND on fold — rather than treating prior state as empty
-    intercept[IllegalStateException] { vread(flat) }
-    intercept[IllegalStateException] { vfold(flat, 2L, Seq(9L)) }
-
-    // one-shot in-place migration: latest flat snapshot re-homes under
-    // the bucketed layout at the reserved id -1, below the whole stream
-    // sequence
-    BucketedState.migrateFromVersionedState(spark, flat, flat, vcntSchema,
-      "v", 8)
-    assert(vread(flat) === Map(1L -> 2L, 2L -> 1L, 3L -> 1L))
-    val (mv, mp, _) = BucketedState.latestManifest(spark, flat).get
-    assert(mv === -1L && mp === 8)
-
-    // the old flat v= dirs stay honored as retry fences: a replayed
-    // pre-migration batch (its fold is IN the migrated snapshot) skips
-    assert(vfold(flat, 1L, Seq(99L)).isEmpty,
-      "replayed pre-migration batch must fence, not refold")
-    // ...and fresh engine ids fold on top as ordinary prior state
-    vfold(flat, 2L, Seq(3L, 4L))
-    assert(vread(flat) ===
-      Map(1L -> 2L, 2L -> 1L, 3L -> 2L, 4L -> 1L))
-
-    // a live bucketed tenant refuses a second migration over itself
-    intercept[IllegalArgumentException] {
-      BucketedState.migrateFromVersionedState(spark, flat, flat,
-        vcntSchema, "v", 8)
+    val fs = new org.apache.hadoop.fs.Path(tmpDir("publish_fs"))
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def exists(p: String) = fs.exists(new org.apache.hadoop.fs.Path(p))
+    def versions(dir: String) = VersionedState.listVersions(spark, dir).toSet
+    def junkStaging(dir: String, id: Long): String = {
+      val st = VersionedState.stagingPath(dir, id)
+      Seq((99L, 99L)).toDF("v", "cnt").write.mode("overwrite").parquet(st)
+      st
     }
 
-    // a FRESH-dir migration refuses a target holding manifest-less v=
-    // debris: those ids would fence stream batches that were never
-    // folded into the migrated snapshot (the in-place reasoning holds
-    // only when the ids ARE the flat shelf's own folded batches)
-    val flat2 = tmpDir("flat_migrate_src2") + "/vcnt"
-    VersionedState.commit(Seq((1L, 1L)).toDF("v", "cnt"), flat2, 0L)
-    val dirty = tmpDir("flat_migrate_dirty") + "/vcnt"
-    VersionedState.commit(Seq((9L, 9L)).toDF("v", "cnt"), dirty, 3L)
-    val err = intercept[IllegalArgumentException] {
-      BucketedState.migrateFromVersionedState(spark, flat2, dirty,
-        vcntSchema, "v", 8)
-    }
-    assert(err.getMessage.contains("not empty"),
-      s"fresh-dir migration must refuse debris: ${err.getMessage}")
+    // ---- flat: a SUM shelf through VersionedState.fold ----
+    val flat = tmpDir("publish_flat") + "/vcnt"
+    def ffold(id: Long, vs: Seq[Long]): Unit =
+      VersionedState.fold(spark, flat, id) { old =>
+        (old.toSeq :+ vcounts(vs)).reduce(_ unionByName _)
+          .groupBy("v").agg(sum(col("cnt")).as("cnt"))
+      }
+    def fread(): Map[Long, Long] =
+      VersionedState.readState(spark, flat, "vcnt").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    ffold(0L, Seq(1L, 2L))
+    ffold(1L, Seq(2L))
+    val before = Map(1L -> 1L, 2L -> 2L)
+    // 1. crash before the rename: the staging is invisible…
+    val st2 = junkStaging(flat, 2L)
+    assert(fread() === before && VersionedState.latest(spark, flat) === Some(1L))
+    // …and the retry with the same id rebuilds and republishes it
+    ffold(2L, Seq(3L))
+    assert(fread() === before + (3L -> 1L) && !exists(st2))
+    // 2. a retry that finds v=2 published drops its staging, changes nothing
+    junkStaging(flat, 2L)
+    VersionedState.publish(spark, flat, 2L)
+    assert(!exists(st2) && fread() === before + (3L -> 1L))
+    ffold(2L, Seq(7L)) // the fence: no refold
+    assert(fread() === before + (3L -> 1L))
+    // 3. an older crashed staging is reaped by the next publish, and
+    // exactly the newest 4 flat versions stay
+    val st1 = junkStaging(flat, 1L)
+    (3L to 8L).foreach(id => ffold(id, Seq(4L)))
+    assert(!exists(st1), "a crashed older staging survived a publish")
+    assert(versions(flat) === Set(5L, 6L, 7L, 8L))
+    assert(fread() === before + (3L -> 1L) + (4L -> 6L))
+
+    // ---- bucketed: the stats tenant through StatsMaintenance.update ----
+    val dir = tmpDir("publish_bucketed") + "/stats"
+    def sread(): Map[Long, Long] = StatsMaintenance.valueCounts(spark, dir)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val p = StatsMaintenance.NumBuckets
+    val bucketOfV = (0L until 64L).toDF("v")
+      .select(col("v"), BucketedState.bucketOf(col("v"), p))
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(bucketOfV.values.toSet.size === p, "64 values must cover every bucket")
+    val a = 0L
+    val b = bucketOfV.collectFirst { case (v, bk) if bk != bucketOfV(a) => v }.get
+    StatsMaintenance.update(dir, (0L until 64L).toDF("v"), 0L)
+    val base = (0L until 64L).map(_ -> 1L).toMap
+    // 1. crash before the rename (data and _MANIFEST staged): invisible…
+    val sst = junkStaging(dir, 1L)
+    val out = fs.create(new org.apache.hadoop.fs.Path(sst, "_MANIFEST"))
+    try out.write(s"p=$p\n0=1".getBytes("UTF-8")) finally out.close()
+    assert(sread() === base &&
+      BucketedState.latestManifest(spark, dir).get._1 === 0L)
+    // …and the retry with the same id republishes
+    assert(StatsMaintenance.update(dir, Seq(a).toDF("v"), 1L).nonEmpty)
+    val after1 = base + (a -> 2L)
+    assert(sread() === after1 && !exists(sst))
+    val (v1, p1, m1) = BucketedState.latestManifest(spark, dir).get
+    // 2. a retry over the published version drops its staging, changes
+    // nothing
+    junkStaging(dir, 1L)
+    VersionedState.publish(spark, dir, 1L)
+    assert(!exists(sst) && sread() === after1)
+    assert(BucketedState.latestManifest(spark, dir).get === ((v1, p1, m1)))
+    assert(StatsMaintenance.update(dir, Seq(b).toDF("v"), 1L).isEmpty)
+    // 3. b's bucket changes owner every batch; the newest 4 manifests
+    // (v=3..6) still point at v=0 (the untouched buckets) and v=1 (a's
+    // bucket), so only v=2 goes
+    (2L to 6L).foreach { id =>
+      StatsMaintenance.update(dir, Seq(b).toDF("v"), id): Unit }
+    assert(versions(dir) === Set(0L, 1L, 3L, 4L, 5L, 6L))
+    assert(sread() === after1 + (b -> (base(b) + 5L)))
   }
 
   test("streaming copy detection: alert union across triggers equals the one-shot q224 answer; retried batch rewrites identical alerts; probe prunes to the batch's buckets") {
@@ -2496,7 +2551,7 @@ class StreamingSpec extends SparkTestBase {
     // re-entered as base rows) and its own held-out baseline
     assert(spark.read.parquet(s"$v1/cells").count() === liveCorpus.count())
     assert(spark.read.parquet(s"$v1/drift_baseline").count() === 1)
-    // old version lingers for in-flight readers (keepVersions), so a
+    // old version lingers for in-flight readers (retention), so a
     // reader that resolved v=0 before the rename finishes cleanly
     assert(fs.exists(new org.apache.hadoop.fs.Path(v0)),
       "old version retired immediately — in-flight readers would crash")
